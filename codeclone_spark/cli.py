@@ -30,7 +30,6 @@ def build_parser() -> argparse.ArgumentParser:
     r.add_argument("--update-baseline", action="store_true")
     r.add_argument("--no-gating", action="store_true")
     r.add_argument("--wave-size", type=int, default=None)
-    r.add_argument("--force-smj", action="store_true")
     r.add_argument("--max-count", action="append", default=[],
                    metavar="RULE=N", help="per-rule violation budget")
     r.add_argument("--test-lane-pattern", default=None, metavar="REGEX",
@@ -243,7 +242,6 @@ def main(argv: list[str] | None = None) -> int:
                 gating=not args.no_gating,
                 update_baseline=args.update_baseline,
                 wave_size=args.wave_size,
-                force_smj=args.force_smj,
                 test_lane_pattern=args.test_lane_pattern,
                 suppressions=list(args.suppress),
                 iceberg_table=args.iceberg_table,

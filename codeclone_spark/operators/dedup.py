@@ -322,14 +322,18 @@ def lsh_verified_pairs(
     was MEASURED to contain zero ReusedExchange nodes — runtime
     re-optimization canonicalizes the two consumers differently and the
     MinHash pipeline silently computes twice.  Exchange reuse is an
-    optimizer COURTESY, not a contract, so scale call-sites (the engine's
-    neardup stage, the scaling bench) pass *scratch_dir*: the candidate
-    pairs are materialized there as parquet once and both consumers read
-    the scan — upstream computed exactly once by construction,
-    recompute-on-executor-loss rolls back to the scratch file (the same
-    checkpoint discipline as connected_components).  With
-    ``scratch_dir=None`` the plan stays fully lazy/lineage-complete —
-    right for small corpora and required by the SQL-twin oracle harness.
+    optimizer COURTESY, not a contract, so the engine's neardup stage, the
+    scaling bench and the dedup registry queries all pass *scratch_dir*:
+    the candidate pairs are materialized there as parquet once and both
+    consumers read the scan — upstream computed exactly once by
+    construction, recompute-on-executor-loss rolls back to the scratch
+    file (the same checkpoint discipline as connected_components).  That
+    write is EAGER: it runs as a Spark job when this function is called,
+    at plan-build time, before the caller runs any action on the returned
+    frame, and the frame reads the scratch file for as long as it is used.
+    With ``scratch_dir=None`` the plan stays fully lazy/lineage-complete
+    (no job until the caller's action) — fine for small corpora, where AQE
+    usually reuses the duplicated exchanges.
 
     Returns (id_a, id_b, jaccard) for candidates with exact Jaccard >=
     *threshold*; a pair LSH never proposed is absent even if its true

@@ -1,15 +1,19 @@
-"""Facts stage: clips ⟕ fixtures → fused decode pass → small facts frame.
+"""Facts stage: the one batch facts plan, clips + fixtures → small facts
+frame, in three phases (``build_facts``).
 
 Scale notes (the plan we want at 100 TB, verified via .explain in tests):
 - Filters on ``part`` (resume pruning) hit the hive/Iceberg partition columns
   → partition pruning at the scan, zero bytes read for done partitions.
-- The fixtures join is an equi-join on a uniform high-cardinality key
-  (clip_id): no skew.  Catalyst/AQE picks broadcast when fixtures fit under
-  the threshold and sort-merge otherwise; at 10^12 rows both sides would be
-  bucketed by clip_id in Iceberg so the join is co-located (documented here,
-  not forceable on local parquet).
-- ``bytes``/``pcm_ref`` die inside the decode pass; everything downstream
-  (rule evaluation, aggregations, verdicts) shuffles only ~100 B/row facts.
+- Phase A decodes over the bare clips scan, so the heavy ``bytes`` column
+  dies inside the Arrow batch and never enters a shuffle.
+- The phase-B fixture meta join is an equi-join on a uniform
+  high-cardinality key (clip_id): no skew.  Catalyst/AQE picks broadcast
+  when the meta fits under the threshold and sort-merge otherwise; at
+  10^12 rows both sides would be bucketed by clip_id in Iceberg so the join
+  is co-located (documented here, not forceable on local parquet).
+- Phase C re-reads ``bytes``/``pcm_ref`` only for the sha-mismatch
+  suspects; everything downstream (rule evaluation, aggregations,
+  verdicts) shuffles only ~100 B/row facts.
 """
 
 from __future__ import annotations
@@ -29,11 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from codeclone_spark.functions.audio import (
-    decode_map_in_pandas,
-    facts_map_in_pandas,
-    snr_map_in_pandas,
-)
+from codeclone_spark.functions.audio import decode_map_in_pandas, snr_map_in_pandas
 from codeclone_spark.synth import LOSSLESS_SNR_DB
 
 FACTS_OUT_SCHEMA = StructType(
@@ -89,7 +89,7 @@ def read_fixtures_pcm(spark: SparkSession, data_dir: str) -> DataFrame:
 
 
 def read_fixtures(spark: SparkSession, data_dir: str) -> DataFrame:
-    """Joined meta+PCM view (the full_join strategy / streaming path)."""
+    """Joined meta+PCM view for the streaming micro-batch path."""
     return read_fixtures_meta(spark, data_dir).join(
         read_fixtures_pcm(spark, data_dir).select("clip_id", "pcm_ref"),
         "clip_id",
@@ -148,46 +148,44 @@ def build_facts(
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
     parts: list[str] | None = None,
-    force_smj: bool = False,
-    snr_strategy: str = "two_phase",
-) -> DataFrame:
-    """Facts frame for the rule pass.  Two strategies:
+) -> tuple[DataFrame, DataFrame]:
+    """The facts frame for the rule pass, in three phases:
 
-    ``two_phase`` (default — the 100 TB plan):
-      A. decode over the bare clips scan (map-only: the heavy ``bytes``
-         column NEVER enters a shuffle; it dies inside the Arrow batch);
-      B. join the small fixture META columns (sha/transcript/dur —
-         ~100 B/row) on clip_id — a cheap shuffle of scalars;
-      C. rows whose decoded sha mismatches the fixture sha (lossy codecs,
-         corrupted encodes) re-read ``bytes`` + ``pcm_ref`` via semi-joins
-         and compute SNR — traffic proportional to the SUSPECT subset, not
-         the table.  sha-equal rows get SNR = lossless sentinel for free.
+    A. decode over the bare clips scan (map-only: the heavy ``bytes``
+       column NEVER enters a shuffle; it dies inside the Arrow batch);
+    B. join the small fixture META columns (sha/transcript/dur —
+       ~100 B/row) on clip_id — a cheap shuffle of scalars;
+    C. rows whose decoded sha mismatches the fixture sha (lossy codecs,
+       corrupted encodes) re-read ``bytes`` + ``pcm_ref`` via semi-joins
+       and compute SNR — traffic proportional to the SUSPECT subset, not
+       the table.  sha-equal rows get SNR = lossless sentinel for free.
 
-    ``full_join`` (fallback for lossy-dominated tables where phase C would
-      approach 100% anyway): single clips ⟕ fixtures join with the fused
-      decode — shuffles payloads once, decodes once.
+    Phase A is persisted so bytes are decoded exactly once (both the rule
+    pass and the suspect branch consume it).  The suspect-partition collect
+    here is the FIRST and ONLY action over the uncached decode, so it fills
+    the cache by itself — no separate count() job, and no concurrent-plan
+    race (one job cannot race itself).  It also lets phase C prune its
+    re-scans statically to the suspect directories.
 
     *parts* restricts to a partition subset (resume pruning, reference
-    core/discovery.py:118-190).  *force_smj* disables broadcast to exercise
-    the sort-merge path the north_star demands for cluster-scale fixtures.
+    core/discovery.py:118-190).  Returns ``(facts, decoded)``; the caller
+    unpersists *decoded* once it is done with *facts*.
     """
     if parts is not None:
         clips = clips.filter(F.col("part").isin(parts))
         fixtures_pcm = fixtures_pcm.filter(F.col("part").isin(parts))
-
-    if snr_strategy == "full_join":
-        fixtures = fixtures_meta.join(
-            fixtures_pcm.select("clip_id", "pcm_ref"), "clip_id", "left"
-        ).select(
-            "clip_id", "fx_sha256", "pcm_ref", "expected_transcript", "expected_dur_ms"
-        )
-        fx = fixtures.hint("merge") if force_smj else fixtures
-        joined = clips.join(fx, "clip_id", "left")
-        return joined.mapInPandas(facts_map_in_pandas, schema=FACTS_OUT_SCHEMA)
-
-    # --- phase A: map-only decode (no shuffle of bytes)
-    decoded = decode_stage(clips)
-    return assemble_facts(decoded, clips, fixtures_meta, fixtures_pcm, force_smj)
+    decoded = decode_stage(clips).persist()
+    suspect_parts = sorted(
+        r["part"]
+        for r in suspect_filter(join_meta(decoded, fixtures_meta))
+        .select("part")
+        .distinct()
+        .collect()
+    )
+    facts = assemble_facts(
+        decoded, clips, fixtures_meta, fixtures_pcm, suspect_parts=suspect_parts
+    )
+    return facts, decoded
 
 
 def decode_stage(clips: DataFrame) -> DataFrame:
@@ -197,7 +195,7 @@ def decode_stage(clips: DataFrame) -> DataFrame:
     return clips.mapInPandas(decode_map_in_pandas, schema=DECODE_OUT_SCHEMA)
 
 
-def join_meta(decoded: DataFrame, fixtures_meta: DataFrame, force_smj: bool = False) -> DataFrame:
+def join_meta(decoded: DataFrame, fixtures_meta: DataFrame) -> DataFrame:
     """Phase B: join the small fixture meta columns onto decoded facts."""
     meta = fixtures_meta.select(
         "clip_id",
@@ -206,8 +204,7 @@ def join_meta(decoded: DataFrame, fixtures_meta: DataFrame, force_smj: bool = Fa
         "expected_transcript",
         "expected_dur_ms",
     )
-    fx_meta = meta.hint("merge") if force_smj else meta
-    return decoded.join(fx_meta, "clip_id", "left")
+    return decoded.join(meta, "clip_id", "left")
 
 
 def suspect_filter(f: DataFrame):
@@ -225,15 +222,15 @@ def assemble_facts(
     clips: DataFrame,
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
-    force_smj: bool = False,
-    suspect_parts: list[str] | None = None,
+    suspect_parts: list[str],
 ) -> DataFrame:
-    """Phases B+C.  *suspect_parts*: when the caller has materialized the
-    suspect partition list (runner does, from the cached decode stage), the
-    phase-C re-scans prune statically to those directories — guaranteed,
-    no reliance on dynamic partition pruning."""
+    """Phases B+C over a decoded frame.  *suspect_parts* is the
+    materialized suspect partition list (``build_facts`` collects it from
+    the cached decode stage): the phase-C re-scans prune statically to
+    those directories — guaranteed, no reliance on dynamic partition
+    pruning."""
     # --- phase B: small-column meta join
-    f = join_meta(decoded, fixtures_meta, force_smj)
+    f = join_meta(decoded, fixtures_meta)
 
     sha_match = F.col("pcm_sha256") == F.col("fx_sha256")
     fixture_status = (
@@ -251,22 +248,15 @@ def assemble_facts(
     # --- phase C: SNR only where the cheap exact check can't settle it.
     # The suspect id-list MUST be broadcast: a sort-merge semi-join here
     # would shuffle the full bytes/pcm_ref columns — the exact cost this
-    # strategy exists to avoid (confirmed via stage metrics: SMJ planned
-    # ~700 core-seconds of payload shuffle at 20k rows).  If suspects ever
-    # outgrow broadcast (lossy-dominated table), use snr_strategy=full_join.
-    suspects = suspect_filter(f).select("clip_id", "part")
-    suspect_ids = suspects.select("clip_id")
-    if suspect_parts is not None:
-        # static literal pruning: only the suspect directories are listed,
-        # let alone read
-        payload_base = clips.filter(F.col("part").isin(suspect_parts))
-        ref_base = fixtures_pcm.filter(F.col("part").isin(suspect_parts))
-    else:
-        # lazy fallback: broadcast the suspect-part set; joining it against
-        # the hive partition column prunes directories dynamically
-        sp = suspects.select("part").distinct()
-        payload_base = clips.join(F.broadcast(sp), "part")
-        ref_base = fixtures_pcm.join(F.broadcast(sp), "part")
+    # plan exists to avoid (confirmed via stage metrics: SMJ planned
+    # ~700 core-seconds of payload shuffle at 20k rows).  Limit: the
+    # broadcast id list grows with the suspect count, so a lossy-dominated
+    # table broadcasts most of its clip_ids.
+    suspect_ids = suspect_filter(f).select("clip_id")
+    # static literal pruning: only the suspect directories are listed, let
+    # alone read
+    payload_base = clips.filter(F.col("part").isin(suspect_parts))
+    ref_base = fixtures_pcm.filter(F.col("part").isin(suspect_parts))
     payload_side = payload_base.join(
         F.broadcast(suspect_ids), "clip_id", "left_semi"
     ).select("clip_id", "bytes", "codec")

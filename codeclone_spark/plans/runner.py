@@ -4,7 +4,8 @@ Stage map (reference §3.1 lifecycle -> ours):
 
 1. bootstrap       -> RunConfig
 2. discover        -> partition listing minus ledger's done set (pruning)
-3. process (map)   -> facts stage: clips ⟕ fixtures -> fused decode UDF
+3. process (map)   -> facts stage: plans/facts.py:build_facts (decode, meta
+                      join, SNR for sha-mismatch suspects)
 4. analyze (reduce)-> one-pass row rules, one-groupBy partition partials,
                       global exact uniqueness (column-pruned scan)
 5. baseline diff   -> accepted-violation anti-join (broadcast), drift KS/PSI
@@ -58,14 +59,10 @@ from codeclone_spark.operators.rules import (
 from codeclone_spark.plans import baseline as bl
 from codeclone_spark.plans import health
 from codeclone_spark.plans.facts import (
-    assemble_facts,
     build_facts,
-    decode_stage,
-    join_meta,
     read_clips,
     read_fixtures_meta,
     read_fixtures_pcm,
-    suspect_filter,
 )
 from codeclone_spark.plans.ledger import (
     Ledger,
@@ -130,8 +127,6 @@ class RunConfig:
     gating: bool = True
     update_baseline: bool = False
     wave_size: int | None = None  # None -> single wave (max parallelism)
-    force_smj: bool = False
-    snr_strategy: str = "two_phase"  # or "full_join" (lossy-dominated tables)
     # Partitions matching this regex are the TEST lane (reference
     # is_test_filepath routing): fully validated and reported, but their
     # gate verdicts are informational — they never fail a run.
@@ -357,38 +352,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     for wave in _chunks(todo, cfg.wave_size):
         wave_id = hashlib.sha1("|".join(wave).encode()).hexdigest()[:12]
         wave_path = os.path.join(waves_dir, f"wave-{wave_id}")
-        wave_clips = clips.filter(F.col("part").isin(wave))
-        if cfg.snr_strategy == "full_join":
-            facts = build_facts(
-                clips, fixtures_meta, fixtures_pcm, parts=wave,
-                force_smj=cfg.force_smj, snr_strategy="full_join",
-            )
-            decoded = None
-        else:
-            # persist phase A so bytes are decoded exactly once per wave
-            # (both the rule pass and the SNR-suspect branch consume it).
-            # The suspects collect below is the FIRST and ONLY action over
-            # the uncached decode, so it materializes the cache by itself —
-            # no separate count() job, and no concurrent-plan race (the
-            # race existed when two dependent jobs launched before the
-            # cache filled; one job cannot race itself).
-            decoded = decode_stage(wave_clips).persist()
-            wave_pcm = fixtures_pcm.filter(F.col("part").isin(wave))
-            # materialize the suspect-partition list (this action fills the
-            # decode cache) -> phase C prunes directories statically
-            sus_parts = sorted(
-                r["part"]
-                for r in suspect_filter(
-                    join_meta(decoded, fixtures_meta, cfg.force_smj)
-                )
-                .select("part")
-                .distinct()
-                .collect()
-            )
-            facts = assemble_facts(
-                decoded, wave_clips, fixtures_meta, wave_pcm,
-                force_smj=cfg.force_smj, suspect_parts=sus_parts,
-            )
+        facts, decoded = build_facts(clips, fixtures_meta, fixtures_pcm, parts=wave)
         facts = facts.persist()
 
         wave_t0 = time.monotonic()
@@ -591,8 +555,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
                     },
                 )
         facts.unpersist()
-        if decoded is not None:
-            decoded.unpersist()
+        decoded.unpersist()
         ledger.save()  # durable commit point: wave outputs + entries together
         _mark("wave_ledger_digests")
 

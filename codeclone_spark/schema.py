@@ -45,8 +45,8 @@ FIXTURES_SCHEMA = StructType(
     ]
 )
 
-# Per-clip decoded facts — output of the single fused decode pass
-# (decode once, derive every fact: reference analysis/units.py:153 fused walk).
+# Per-clip decoded facts — every fact derives from one decode of the clip
+# (functions/audio.py:_decode_row; reference analysis/units.py:153 fused walk).
 FACTS_SCHEMA = StructType(
     [
         StructField("decode_ok", BooleanType(), False),

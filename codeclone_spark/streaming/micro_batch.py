@@ -1,10 +1,14 @@
 """Structured Streaming validation over a clips stream.
 
-``stream_validate`` wires readStream(parquet dir) -> foreachBatch(batch rule
-pass) -> violations sink.  Watermarked windowed violation counts give the
-drift-style rolling view.  Used by tests with a file-source stream; on a
-real deployment the source is Kafka/Iceberg-CDC and the sink an Iceberg
-append — same plan.
+``stream_validate`` wires readStream(parquet dir) -> foreachBatch(rule
+pass) -> violations sink.  Each micro-batch derives its facts with the
+single-pass ``facts_map_in_pandas`` kernel over clips ⟕ fixtures (the same
+per-clip decode and SNR functions as the batch plan's phases A and C):
+routing micro-batches through the batch plan would add a suspect collect
+and a cache fill to every batch.  Watermarked windowed violation counts
+give the drift-style rolling view.  Used by tests with a file-source
+stream; on a real deployment the source is Kafka/Iceberg-CDC and the sink
+an Iceberg append — same plan.
 """
 
 from __future__ import annotations
@@ -29,11 +33,9 @@ def stream_validate(
     checkpoint_dir: str,
     trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Micro-batch validation: each batch runs the same fused decode pass +
-    single-scan rule evaluation as the batch engine, appending violation
+    """Micro-batch validation: each batch runs the single-pass facts kernel
+    + the batch engine's single-scan rule evaluation, appending violation
     parquet.  `trigger once` processes the backlog and stops (test mode)."""
-    from codeclone_spark.plans.facts import read_fixtures
-
     fixtures = read_fixtures(spark, fixtures_dir)
 
     stream = (

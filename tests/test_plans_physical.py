@@ -4,11 +4,15 @@ broadcast-vs-SMJ join choice, and single-scan (shuffle-free) rule evaluation."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from codeclone_spark.operators.rules import evaluate_row_rules
 from codeclone_spark.plans.facts import (
+    FACTS_OUT_SCHEMA,
     build_facts,
+    join_meta,
     read_clips,
     read_fixtures_meta,
     read_fixtures_pcm,
@@ -40,25 +44,44 @@ def test_column_pruning_uniqueness_scan(spark, tiny_dir):
     assert "clip_id" in read_schema
 
 
-def test_fixture_join_broadcast_small(spark, tiny_dir):
-    clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
-        clips, read_fixtures_meta(spark, tiny_dir), read_fixtures_pcm(spark, tiny_dir)
+def _joins(plan: str) -> list[tuple[str, str]]:
+    """(operator, join type) of every join in the operator tree."""
+    tree = plan.split("== Physical Plan ==")[-1].split("\n\n")[0]
+    return re.findall(r"(\w+Join) (\w+)", tree)
+
+
+def _facts_joins(spark, tiny_dir):
+    """Joins of the phase-B meta join alone, and of the whole facts plan."""
+    meta = read_fixtures_meta(spark, tiny_dir)
+    facts, decoded = build_facts(
+        read_clips(spark, tiny_dir), meta, read_fixtures_pcm(spark, tiny_dir)
     )
-    plan = _plan(facts)
-    assert "BroadcastHashJoin" in plan  # tiny fixture meta fits the threshold
+    try:
+        return _joins(_plan(join_meta(decoded, meta))), _joins(_plan(facts))
+    finally:
+        decoded.unpersist()
+
+
+def test_fixture_join_broadcast_small(spark, tiny_dir):
+    meta_joins, _ = _facts_joins(spark, tiny_dir)
+    # tiny fixture meta fits the threshold
+    assert meta_joins == [("BroadcastHashJoin", "LeftOuter")]
 
 
 def test_fixture_join_smj_forced(spark, tiny_dir):
-    clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
-        clips,
-        read_fixtures_meta(spark, tiny_dir),
-        read_fixtures_pcm(spark, tiny_dir),
-        force_smj=True,
-    )
-    plan = _plan(facts)
-    assert "SortMergeJoin" in plan  # the cluster-scale fixtures path
+    """With auto-broadcast off (fixture meta too large to broadcast) the
+    meta join is sort-merge, while phase C's suspect-id semi-joins stay
+    broadcast: a sort-merge semi-join there would shuffle the payloads."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        meta_joins, facts_joins = _facts_joins(spark, tiny_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert meta_joins == [("SortMergeJoin", "LeftOuter")]
+    semis = [op for op, kind in facts_joins if kind == "LeftSemi"]
+    assert semis == ["BroadcastHashJoin"] * 2, facts_joins
 
 
 def test_two_phase_decode_is_map_only(spark, tiny_dir):
@@ -74,23 +97,25 @@ def test_two_phase_decode_is_map_only(spark, tiny_dir):
     assert "MapInPandas" in body
 
 
-def test_row_rules_are_single_pass_no_shuffle(spark, tiny_dir):
+def test_row_rules_are_single_pass_no_shuffle(spark):
     """All row rules evaluate in one projection+generate over facts —
-    an Exchange here would mean a per-rule shuffle creep.  Uses the
-    full_join strategy whose facts plan is shuffle-free after the join."""
-    clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
-        clips,
-        read_fixtures_meta(spark, tiny_dir),
-        read_fixtures_pcm(spark, tiny_dir),
-        snr_strategy="full_join",
-    )
-    viol = evaluate_row_rules(facts)
-    plan = _plan(viol)
-    body = plan.split("== Physical Plan ==")[-1]
-    # the only allowed exchange is the fixture join's broadcast
-    assert "Exchange hashpartitioning" not in body
-    assert "Generate explode" in body or "Generate" in body
+    an Exchange here would mean a per-rule shuffle creep."""
+    healthy = {
+        "clip_id": "c1", "sr_hz": 16000, "dur_ms": 500, "codec": "pcm_s16le",
+        "transcript": "hi", "part": "pcm_s16le-b00", "fx_sha256": "f" * 64,
+        "expected_transcript": "hi", "expected_dur_ms": 500, "decode_ok": True,
+        "decoded_samples": 8000, "decoded_dur_ms": 500.0, "pcm_sha256": "f" * 64,
+        "rms": 0.2, "peak": 0.5, "clipping_ratio": 0.0, "silence_ratio": 0.05,
+        "spectral_flatness": 0.2, "dominant_freq_hz": 440.0,
+        "band_energies": [0.0] * 8, "snr_db": 999.0,
+        "fixture_status": "checked", "transcript_match": True,
+    }
+    broken = {**healthy, "clip_id": "c2", "decode_ok": False,
+              "error_kind": "undecodable", "fixture_status": "undecodable"}
+    facts = spark.createDataFrame([healthy, broken], schema=FACTS_OUT_SCHEMA)
+    body = _plan(evaluate_row_rules(facts)).split("== Physical Plan ==")[-1]
+    assert "Exchange" not in body, body
+    assert "Generate" in body
 
 
 def test_stats_registry_width_adds_zero_wave_jobs(spark):

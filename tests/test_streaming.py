@@ -6,7 +6,21 @@ import os
 
 from pyspark.sql import functions as F
 
+from codeclone_spark.operators.rules import evaluate_row_rules
+from codeclone_spark.plans.facts import (
+    build_facts,
+    read_clips,
+    read_fixtures_meta,
+    read_fixtures_pcm,
+)
 from codeclone_spark.streaming import stream_validate, windowed_violation_counts
+
+
+def _rule_counts(viol) -> dict[str, int]:
+    return {
+        r["rule_id"]: r["n"]
+        for r in viol.groupBy("rule_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
 
 
 def test_stream_validate_matches_batch(spark, tiny_dir, tmp_path):
@@ -22,11 +36,27 @@ def test_stream_validate_matches_batch(spark, tiny_dir, tmp_path):
     )
     q.awaitTermination(300)
     viol = spark.read.parquet(out)
-    counts = {r["rule_id"]: r["n"] for r in viol.groupBy("rule_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    # same row-rule counts as the batch engine golden (uniq is global-only)
-    assert counts["audio:undecodable"] == 2
-    assert counts["audio:snr"] == 2
-    assert counts["ref:fixture_missing"] == 100
+    # every row rule counts the same as the batch facts plan (uniq is
+    # global-only, so neither side has it)
+    facts, decoded = build_facts(
+        read_clips(spark, tiny_dir),
+        read_fixtures_meta(spark, tiny_dir),
+        read_fixtures_pcm(spark, tiny_dir),
+    )
+    try:
+        batch = _rule_counts(evaluate_row_rules(facts))
+    finally:
+        decoded.unpersist()
+    assert batch == {
+        "audio:len_consistency": 4,
+        "audio:snr": 2,
+        "audio:transcript_eq": 4,
+        "audio:undecodable": 2,
+        "ref:fixture_missing": 100,
+        "stats:null:dur_ms": 2,
+        "stats:null:transcript": 4,
+    }
+    assert _rule_counts(viol) == batch
     # exactly-once: re-running the same stream adds nothing
     q2 = stream_validate(
         spark,
