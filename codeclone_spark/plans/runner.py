@@ -70,6 +70,7 @@ from codeclone_spark.plans.ledger import (
     merge_partials,
     partition_data_signature,
 )
+from codeclone_spark.session import local_frame
 
 TABLE_SCOPE = "<table>"
 
@@ -343,8 +344,8 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         )
     else:
         acc_df = F.broadcast(
-            spark.createDataFrame(
-                [(k,) for k in accepted] or [("\x00never",)], ["vkey"]
+            local_frame(
+                spark, [(k,) for k in accepted] or [("\x00never",)], "vkey string"
             ).withColumn("accepted", F.lit(True))
         )
 
@@ -418,9 +419,16 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
 
         # Independent consumers of the cached viol frame (stats collect +
         # exemplar write): overlap them so the second job back-fills the
-        # first's tail (guide §2.6).  Both may race to fill the persist;
-        # the block manager's per-partition compute locks make that safe
-        # (one task computes a partition, the other blocks then reads).
+        # first's tail (guide §2.6).  Both may fill the persist, and on a
+        # multi-executor cluster each may compute a partition on its own,
+        # so `_rk` can break ties differently in the two jobs.  That is
+        # safe without a cache-filling action first: `_rk` ties only rows
+        # equal on (rule_id, partition, clip_id, observed), and `expected`
+        # and `severity` are per-rule literals, so tied rows are identical
+        # in every written column (and in vkey/accepted, derived from
+        # them).  Any tie-break keeps the same multiset of rows, so the
+        # digest always matches the exemplars written (pinned by
+        # test_capped_digest_matches_written_rows_with_tied_clip_ids).
         with ThreadPoolExecutor(max_workers=2) as _wpool:
             _f_stats = _wpool.submit(_collect_rule_stats)
             _f_write = _wpool.submit(_write_wave_viol)
@@ -676,8 +684,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             ((snapshot or {}).get("clones") or {}).get(NEARDUP_RULE_ID, [])
         )
         acc_ck = F.broadcast(
-            spark.createDataFrame(
-                [(k,) for k in accepted_clones] or [("\x00never",)], ["ckey"]
+            local_frame(
+                spark,
+                [(k,) for k in accepted_clones] or [("\x00never",)],
+                "ckey string",
             ).withColumn("known", F.lit(True))
         )
         # every consumer below (summary agg, violation sink, baseline
@@ -779,23 +789,9 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             ledger.partitions[p].get("rule_counts", {}).items()
         )
     ]
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    counts_schema = StructType(
-        [
-            StructField("partition", StringType()),
-            StructField("rule_id", StringType()),
-            StructField("n_viol", LongType()),
-            StructField("n_new", LongType()),
-        ]
-    )
+    counts_schema = "partition string, rule_id string, n_viol long, n_new long"
     counts = uniq_counts.unionByName(
-        spark.createDataFrame(row_count_tuples, counts_schema)
+        local_frame(spark, row_count_tuples, counts_schema)
     )
     if neardup_stats is not None:
         # joins the counts frame so suppression directives and the review
@@ -803,7 +799,8 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         # grid drops the row (TABLE_SCOPE is not a partition) — the rule's
         # single table-scope verdict is appended with the drift rows below
         counts = counts.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (
                         TABLE_SCOPE,
@@ -834,18 +831,21 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         )
         counts = counts.drop("_supp")
 
-    # counts feeds the review queue, the dense verdict grid and the gate
-    # arithmetic — three actions; persist the (partition, rule)-sized frame
-    # so the uniq_counts join/groupBy lineage runs once (unpersisted after
-    # the final writes).
+    # counts feeds two actions: the review-queue collect and the verdict
+    # sink (through the dense grid).  Persist the (partition, rule)-sized
+    # frame so the uniq_counts join/groupBy lineage runs once (unpersisted
+    # after the final writes).  Its ledger-count and near-dup rows are
+    # local_frame LocalRelations, scanned in the JVM: neither action starts
+    # a Python worker.
     counts = counts.persist()
     _mark("uniqueness_and_ndv")
-    part_rows = spark.createDataFrame(
+    part_rows = local_frame(
+        spark,
         [
             (p, int(ledger.partitions.get(p, {}).get("rows", 0)))
             for p in all_parts
         ],
-        ["part", "rows"],
+        "part string, rows long",
     )
     lane_parts: set[str] = set()
     if cfg.test_lane_pattern:
@@ -1002,8 +1002,11 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             )
         )
 
-    drift_df = spark.createDataFrame(
-        drift_verdicts, ["partition", "rule_id", "pass", "reason", "novelty"]
+    drift_df = local_frame(
+        spark,
+        drift_verdicts,
+        "partition string, rule_id string, pass boolean, reason string, "
+        "novelty string",
     )
     verdicts = verdicts.unionByName(drift_df)
 

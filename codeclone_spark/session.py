@@ -1,16 +1,25 @@
-"""SparkSession factory.
+"""SparkSession factory and driver-literal frames.
 
 One place to set every config that matters for correctness (UTC timestamps
 so DuckDB oracles compare cleanly; Arrow for vectorized UDFs) and for scale
 (AQE with skew-join handling, shuffle partitions sized to cores locally —
 on a real cluster these come from spark-submit conf, not code).
+
+``local_frame`` builds a small frame from driver-side rows as an Arrow
+``LocalRelation``: it is scanned (and broadcast) inside the JVM, so an
+action over it never starts a Python worker, unlike ``createDataFrame``
+over a list, which is a Python RDD.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -60,6 +69,28 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence[object]],
+    schema: str | StructType,
+) -> DataFrame:
+    """Frame of driver-side *rows* typed by *schema* (DDL string or
+    ``StructType``), planned as a JVM ``LocalRelation``.
+
+    Arrow input below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB) becomes a ``LocalRelation``; every caller passes bounded,
+    driver-sized row sets (rule ids, ledger counts, accepted keys capped
+    at ``accepted_inline_max``) far below it."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def stop_spark() -> None:

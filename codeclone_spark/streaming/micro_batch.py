@@ -23,6 +23,7 @@ from codeclone_spark.operators.rules import evaluate_row_rules
 from codeclone_spark.plans.facts import FACTS_OUT_SCHEMA, read_fixtures
 from codeclone_spark.functions.audio import facts_map_in_pandas
 from codeclone_spark.schema import CLIPS_SCHEMA
+from codeclone_spark.session import local_frame
 
 
 def stream_validate(
@@ -104,7 +105,8 @@ def stream_drift_monitor(
         ).collect()[0]
         hist = [int(x) for x in row["h"]]
         psi = bl.psi(b_hist, hist)
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [
                 (
                     int(row["rows"]),

@@ -12,6 +12,9 @@ Layers, bottom to top (lower may never import higher):
 
 `cli` and `entry_queries` are top-level surfaces: anything may be
 imported BY them, nothing inside the package may import THEM.
+
+`session` (the SparkSession factory and ``local_frame``) is a leaf: it
+imports nothing from the package, so operators, plans and streaming may import it.
 """
 
 from __future__ import annotations
@@ -26,13 +29,14 @@ PKG_ROOT = os.path.dirname(codeclone_spark.__file__)
 # package -> internal sub-packages/modules it may import
 ALLOWED = {
     "functions": {"functions", "schema", "synth"},
-    "operators": {"operators", "functions", "schema"},
+    "operators": {"operators", "functions", "schema", "session"},
     "sources": {"sources", "schema"},
     "plans": {
         "plans", "operators", "sources", "functions", "schema", "synth", "",
+        "session",
     },
     "streaming": {
-        "streaming", "plans", "operators", "functions", "schema",
+        "streaming", "plans", "operators", "functions", "schema", "session",
     },
 }
 SURFACES = {"cli", "entry_queries"}  # importable by tests/users only
@@ -89,3 +93,7 @@ def test_surfaces_not_imported_internally():
                 if _first_component(mod) in SURFACES:
                     violations.append(f"{rel} imports {mod}")
     assert not violations, "\n".join(violations)
+
+
+def test_session_is_a_leaf():
+    assert not _imports_of(os.path.join(PKG_ROOT, "session.py"))

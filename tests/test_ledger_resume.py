@@ -10,6 +10,7 @@ since changed must be re-derived.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -269,3 +270,62 @@ def test_exemplar_cap_zero_means_uncapped(spark, tiny_dir, tmp_path_factory):
     assert res.report["findings"]["suppressed_exemplars"] == 0
     viol = spark.read.parquet(res.violations_path)
     assert viol.count() == res.report["findings"]["total_violations"]
+
+
+def _wave_digest(rows: list[dict]) -> str:
+    """The wave's per-partition exemplar digest, recomputed in Python from
+    written rows: per rule, sha256 over the sorted ``rule|clip|observed``
+    strings (``concat_ws`` skips nulls), then sha256 over the sorted
+    ``rule:digest`` entries."""
+    by_rule: dict[str, list[str]] = {}
+    for r in rows:
+        key = "|".join(
+            v for v in (r["rule_id"], r["clip_id"], r["observed"]) if v is not None
+        )
+        by_rule.setdefault(r["rule_id"], []).append(key)
+    per_rule = sorted(
+        f"{rid}:{hashlib.sha256(';'.join(sorted(keys)).encode()).hexdigest()}"
+        for rid, keys in by_rule.items()
+    )
+    return hashlib.sha256(";".join(per_rule).encode()).hexdigest()
+
+
+def test_capped_digest_matches_written_rows_with_tied_clip_ids(
+    spark, tiny_dir, tmp_path
+):
+    """A part= directory holding its parquet file twice makes every row
+    rule violation in it a tie on the exemplar rank's (clip_id, observed)
+    order.  With a cap of 1 the cap falls inside each tied pair; tied rows
+    are identical in every written column, so the ledger digest must equal
+    a digest recomputed from the rows the wave actually wrote."""
+    dup_part, plain_part = "pcm_s16le-b01", "pcm_s16le-b03"
+    data = tmp_path / "data"
+    for sub in ("clips", "fixtures_pcm"):
+        for part in (dup_part, plain_part):
+            shutil.copytree(
+                os.path.join(tiny_dir, sub, f"part={part}"),
+                data / sub / f"part={part}",
+            )
+    shutil.copy(os.path.join(tiny_dir, "fixtures_ref.parquet"), data)
+    dup_dir = data / "clips" / f"part={dup_part}"
+    (src,) = [f for f in os.listdir(dup_dir) if f.endswith(".parquet")]
+    shutil.copy(dup_dir / src, dup_dir / f"copy-{src}")
+
+    out = str(tmp_path / "out")
+    res = run(spark, RunConfig(data_dir=str(data), out_dir=out, exemplar_cap=1))
+    led = Ledger(os.path.join(out, "ledger"))
+    dup_counts = led.partitions[dup_part]["rule_counts"]
+    assert len(dup_counts) >= 3
+    assert all(nv >= 2 and nv % 2 == 0 for nv, _nn in dup_counts.values())
+    assert res.report["findings"]["suppressed_exemplars"] > 0
+    for part in (dup_part, plain_part):
+        entry = led.partitions[part]
+        written = (
+            spark.read.parquet(
+                os.path.join(out, "waves", entry["wave"], "violations")
+            )
+            .filter(F.col("partition") == part)
+            .collect()
+        )
+        assert len(written) == len(entry["rule_counts"])  # one per rule
+        assert entry["digest"] == _wave_digest([r.asDict() for r in written])
