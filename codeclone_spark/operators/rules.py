@@ -304,7 +304,8 @@ def evaluate_uniqueness(facts: DataFrame) -> DataFrame:
     """Exact duplicate detection on clip_id (reference ``build_groups``
     grouping.py:38-45 keeps groups with size > 1).  clip_id is a high-card
     uniform hash key, so this shuffle has no skew; map-side partial counts
-    make it one efficient exchange."""
+    make it one efficient exchange.  Reads only ``clip_id`` and ``part`` (a
+    column-pruned scan suffices); rows carry the violation-sink columns."""
     dups = (
         facts.groupBy("clip_id")
         .agg(
@@ -319,6 +320,7 @@ def evaluate_uniqueness(facts: DataFrame) -> DataFrame:
         F.col("clip_id"),
         F.concat_ws("", F.lit("count="), F.col("n").cast("string")).alias("observed"),
         F.lit("unique clip_id").alias("expected"),
+        F.lit(RULE_SEVERITY["uniq:clip_id"]).alias("severity"),
     )
 
 
@@ -356,17 +358,6 @@ def qsk_bin(spec: NumericColSpec) -> Column:
     return F.when(F.col(spec.name).isNotNull() & (F.col(spec.name) >= 0), idx)
 
 
-def qsketch_counts(facts: DataFrame, spec: NumericColSpec) -> DataFrame:
-    """(part, bin, n) sketch partials for one registry column — mergeable
-    by summing counts."""
-    return (
-        facts.select("part", qsk_bin(spec).alias("bin"))
-        .filter(F.col("bin").isNotNull())
-        .groupBy("part", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def qsketch_counts_multi(
     facts: DataFrame, specs: tuple[NumericColSpec, ...]
 ) -> DataFrame:
@@ -392,12 +383,12 @@ def qsketch_counts_multi(
 def partition_aggregates(facts: DataFrame) -> DataFrame:
     """Per-partition stats in one groupBy (partial+final hash agg); only
     the fine-grained quantile sketch lives in its own tiny aggregation
-    (:func:`qsketch_counts` — codegen-size reasons).  Histogram partials
+    (:func:`qsketch_counts_multi` — codegen-size reasons).  Histogram partials
     are mergeable arrays so drift can be computed from the ledger across
     resumable waves without rescanning data."""
     sr_cats = [F.sum((F.col("sr_hz") == v).cast("long")).alias(f"sr_{v}") for v in ALLOWED_SR]
     # one (null, min, max, mean) quartet per registry column — the
-    # mergeable quantile SKETCH is aggregated separately (qsketch_counts)
+    # mergeable quantile SKETCH is aggregated separately (qsketch_counts_multi)
     # to keep this plan's codegen unit small
     col_aggs = []
     for spec in NUMERIC_STATS_COLUMNS:
@@ -458,13 +449,13 @@ def build_verdicts(
     violation_counts: DataFrame,
     partition_rows: DataFrame,
     gates: GateConfig,
-    accepted: set[str] | None = None,
     test_lane: set[str] | None = None,
 ) -> DataFrame:
     """(partition, rule_id) -> pass/reason/novelty.
 
     *violation_counts*: (partition, rule_id, n_viol, n_new) where n_new counts
-    violations NOT in the baseline accepted set.  *partition_rows*: (part,
+    violations NOT in the baseline accepted set — the caller applies that
+    set, so only n_new reaches the gate.  *partition_rows*: (part,
     rows).  Every (partition x row rule) pair gets a verdict (dense grid), so
     a clean partition still asserts an explicit pass — the reference's gate
     evaluator enumerates every configured gate the same way.

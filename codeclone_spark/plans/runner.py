@@ -1,15 +1,19 @@
 """End-to-end validation run: the reference pipeline re-expressed on Spark.
 
-Stage map (reference §3.1 lifecycle -> ours):
+Stage map (reference §3.1 lifecycle -> ours; :func:`run` calls these
+stage functions in order):
 
-1. bootstrap       -> RunConfig
-2. discover        -> partition listing minus ledger's done set (pruning)
-3. process (map)   -> facts stage: plans/facts.py:build_facts (decode, meta
+1. bootstrap       -> RunConfig; _parse_suppressions, _trust_baseline
+2. discover        -> _discover: partition listing minus ledger's done set
+3. process (map)   -> _run_wave: plans/facts.py:build_facts (decode, meta
                       join, SNR for sha-mismatch suspects)
-4. analyze (reduce)-> one-pass row rules, one-groupBy partition partials,
-                      global exact uniqueness (column-pruned scan)
-5. baseline diff   -> accepted-violation anti-join (broadcast), drift KS/PSI
-6. report          -> canonical JSON document with integrity digest
+4. analyze (reduce)-> _run_wave: one-pass row rules, one-groupBy partition
+                      partials; _read_ledger; _uniqueness: global exact
+                      uniqueness (column-pruned scan); _neardup (opt-in)
+5. baseline diff   -> _counts: accepted-violation anti-join (broadcast);
+                      _table_verdicts: drift KS/PSI, schema, near-dup
+6. report          -> _write_sinks; _report: canonical JSON document with
+                      integrity digest; _update_baseline
 7. gate            -> per-(partition, rule) verdicts; exit codes 0/2/3
 
 Waves: partitions process in deterministic chunks; each wave durably writes
@@ -24,12 +28,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,13 +54,16 @@ from codeclone_spark.operators.rules import (
     NUMERIC_STATS_COLUMNS,
     RULE_SEVERITY,
     SCHEMA_RULE_IDS,
+    TABLE_RULE_IDS,
     GateConfig,
     build_verdicts,
     evaluate_row_rules,
+    evaluate_uniqueness,
     partition_aggregates,
     qsketch_counts_multi,
     violation_key,
 )
+from codeclone_spark.operators.schema_diff import canonical_schema, schema_diff
 from codeclone_spark.plans import baseline as bl
 from codeclone_spark.plans import health
 from codeclone_spark.plans.facts import (
@@ -71,6 +79,7 @@ from codeclone_spark.plans.ledger import (
     partition_data_signature,
 )
 from codeclone_spark.session import local_frame
+from codeclone_spark.sources import validate_clips_schema, validate_data_dir
 
 TABLE_SCOPE = "<table>"
 
@@ -208,74 +217,182 @@ def _round_floats(obj: Any, nd: int = 6) -> Any:
     return obj
 
 
-def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
-    t0 = time.monotonic()
-    phases: dict[str, float] = {}
-    _last = [t0]
+def _overlap(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent Spark actions on their own threads and return their
+    results in argument order: the second job back-fills the first's
+    straggler tail (guide §2.6 overlapping independent jobs).  Every result
+    is read, so an exception in any thunk is raised here."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]
 
-    def _mark(name: str) -> None:
+
+def _count_null(col: str) -> Column:
+    """Rows of the group whose *col* is null: the NEW (not baseline-known)
+    findings after a left join against an accepted-key frame."""
+    return F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
+
+
+def _sorted_digest(item: Column) -> Column:
+    """sha256 over the group's *item* strings, sorted and ';'-joined (null
+    items are left out): independent of row order and partitioning."""
+    return F.sha2(F.concat_ws(";", F.sort_array(F.collect_list(item))), 256)
+
+
+def _fold_digests(items: Iterable[str]) -> str:
+    """Driver-side fold of per-group digests into one order-free digest."""
+    return hashlib.sha256(";".join(sorted(items)).encode()).hexdigest()
+
+
+class _Phases:
+    """Wall seconds per runner phase (``report["phases"]``), summed over
+    waves.  The key order is an interface: perfbench's tracer rebuilds each
+    phase's window from it (pinned by tests/test_runner_phases.py)."""
+
+    def __init__(self) -> None:
+        self.t0 = self.last = time.monotonic()
+        self.seconds: dict[str, float] = {}
+
+    def mark(self, name: str) -> None:
         now = time.monotonic()
-        phases[name] = round(phases.get(name, 0.0) + (now - _last[0]), 3)
-        _last[0] = now
+        self.seconds[name] = round(self.seconds.get(name, 0.0) + (now - self.last), 3)
+        self.last = now
 
-    # --- suppression directives parse + validate up front: a malformed or
-    # ill-scoped directive must fail before any cluster compute is spent
-    directives: list[tuple[str, str]] = []
-    if cfg.suppressions:
-        import re as _re
 
-        from codeclone_spark.operators.rules import TABLE_RULE_IDS
+@dataclass
+class _Inputs:
+    clips: DataFrame
+    fixtures_meta: DataFrame
+    fixtures_pcm: DataFrame
+    current_schema: dict[str, str]
+    all_parts: list[str]
+    lane_parts: set[str]
+    data_sigs: dict[str, str]
+    accepted_sha: str
 
-        for s in cfg.suppressions:
-            # rule ids contain ':' themselves — split on the LAST colon
-            rid, _, part = s.rpartition(":")
-            if not rid or not part or not _re.match(r"^[A-Za-z0-9:_\-]+$", rid):
-                raise ValueError(f"malformed suppression {s!r} (rule_id:partition)")
-            # Partition-scoped directives never match table-scope rules:
-            # uniq:clip_id (and near-dup clusters) are attributed to
-            # min(part) for reporting only, so "rule:<part>" would suppress
-            # groups spanning OTHER partitions.  Only '*' may suppress them.
-            if part != "*" and rid in (TABLE_RULE_IDS + [NEARDUP_RULE_ID]):
-                raise ValueError(
-                    f"suppression {rid}:{part}: table-scope rules accept "
-                    "only the '*' partition"
-                )
-            directives.append((rid, part))
 
+@dataclass
+class _LedgerView:
+    """Everything the post-wave stages read from the ledger, gathered in
+    one pass over the listed partitions (_read_ledger)."""
+
+    table_stats: dict[str, Any] = field(default_factory=dict)
+    quantiles: dict[str, dict[str, float | None]] = field(default_factory=dict)
+    wave_parts: dict[str, list[str]] = field(default_factory=dict)
+    count_rows: list[tuple[str, str, int, int]] = field(default_factory=list)
+    part_rows: list[tuple[str, int]] = field(default_factory=list)
+    rule_counts: dict[str, int] = field(default_factory=dict)
+    suppressed: int = 0
+    rows_test_lane: int = 0
+
+
+@dataclass
+class _NearDup:
+    clusters: DataFrame
+    viol: DataFrame
+    metrics: dict[str, Any]
+
+
+def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
+    """Validate ``cfg.data_dir`` end to end (stage map: module docstring)."""
+    clock = _Phases()
+    directives = _parse_suppressions(cfg.suppressions)
     os.makedirs(cfg.out_dir, exist_ok=True)
     ledger = Ledger(os.path.join(cfg.out_dir, "ledger"))
+    trusted = _trust_baseline(cfg)
+    if isinstance(trusted, RunResult):
+        return trusted
+    snapshot, trust, warnings = trusted
+    inp = _discover(spark, cfg, snapshot)
+    clock.mark("discovery")
+    done = ledger.done_parts(inp.data_sigs, inp.accepted_sha) & set(inp.all_parts)
+    todo = [p for p in inp.all_parts if p not in done]
+    acc_df = _accepted_frame(spark, cfg, snapshot)
+    for wave in _chunks(todo, cfg.wave_size):
+        _run_wave(cfg, ledger, inp, acc_df, wave, clock)
+    view = _read_ledger(ledger, inp.all_parts, inp.lane_parts)
+    approx_ndv, uniq_viol = _uniqueness(inp.clips)
+    nd = None
+    if cfg.neardup_transcript:
+        nd = _neardup(spark, cfg, ledger, inp, snapshot)
+        clock.mark("neardup_clusters")
+    all_viol, counts, n_supp_directive = _counts(
+        spark, cfg, acc_df, uniq_viol, view, nd, directives
+    )
+    clock.mark("uniqueness_and_ndv")
+    part_rows = local_frame(spark, view.part_rows, "part string, rows long")
+    verdicts = build_verdicts(counts, part_rows, cfg.gates, test_lane=inp.lane_parts)
+    table_verdicts, gate_metrics = _table_verdicts(
+        spark, cfg, snapshot, view, inp.current_schema, nd, directives, warnings
+    )
+    review_queue = _review_queue(counts)
+    paths = _write_sinks(cfg, all_viol, verdicts.unionByName(table_verdicts))
+    # both frames were read by the review queue and the sinks
+    uniq_viol.unpersist()
+    counts.unpersist()
+    clock.mark("final_writes")
+    report = _report(
+        spark, cfg, clock, paths, inp, view, resumed=len(done), approx_ndv=approx_ndv,
+        n_supp_directive=n_supp_directive, review_queue=review_queue,
+        gate_metrics=gate_metrics, nd=nd, trust=trust, warnings=warnings,
+    )
+    if cfg.update_baseline and cfg.baseline_path:
+        _update_baseline(cfg, snapshot, inp, all_viol, nd, report)
+        return RunResult(EXIT_OK, report, *paths)
+    failed = report["findings"]["failed_gates"]
+    return RunResult(EXIT_GATE_FAILURE if failed else EXIT_OK, report, *paths)
 
-    # --- stage 5a: baseline trust (checked BEFORE compute: fail-closed must
-    # not waste a cluster run; reference baseline_state.py:138-170)
-    snapshot, trust = (None, bl.Trust(False, "no baseline configured"))
-    warnings: list[str] = []
-    if cfg.baseline_path:
-        snapshot, trust = bl.load_baseline(cfg.baseline_path)
-        if not trust.trusted:
-            if snapshot is None and trust.reason == "baseline missing":
-                warnings.append("baseline missing: diff/drift disabled")
-                snapshot = None
-            elif cfg.gating and not cfg.update_baseline:
-                # fail closed: untrusted baseline + gating requested
-                report = {
-                    "report_schema_version": REPORT_SCHEMA_VERSION,
-                    "meta": _meta(cfg),
-                    "error": f"CONTRACT_ERROR: {trust.reason}",
-                }
-                return RunResult(EXIT_CONTRACT_ERROR, report, "", "")
-            else:
-                warnings.append(f"untrusted baseline ({trust.reason}): degraded")
-                snapshot = None
-    accepted = sorted((snapshot or {}).get("accepted_violations", []))
-    accepted_ref = (snapshot or {}).get("accepted_ref") or {}
 
-    from codeclone_spark.sources import validate_clips_schema, validate_data_dir
+def _parse_suppressions(suppressions: list[str]) -> list[tuple[str, str]]:
+    """Suppression directives, parsed and validated up front: a malformed or
+    ill-scoped directive must fail before any cluster compute is spent."""
+    directives: list[tuple[str, str]] = []
+    for s in suppressions:
+        # rule ids contain ':' themselves — split on the LAST colon
+        rid, _, part = s.rpartition(":")
+        if not rid or not part or not re.match(r"^[A-Za-z0-9:_\-]+$", rid):
+            raise ValueError(f"malformed suppression {s!r} (rule_id:partition)")
+        # Partition-scoped directives never match table-scope rules:
+        # uniq:clip_id (and near-dup clusters) are attributed to
+        # min(part) for reporting only, so "rule:<part>" would suppress
+        # groups spanning OTHER partitions.  Only '*' may suppress them.
+        if part != "*" and rid in (TABLE_RULE_IDS + [NEARDUP_RULE_ID]):
+            raise ValueError(
+                f"suppression {rid}:{part}: table-scope rules accept "
+                "only the '*' partition"
+            )
+        directives.append((rid, part))
+    return directives
 
+
+def _trust_baseline(cfg: RunConfig) -> tuple[dict | None, bl.Trust, list[str]] | RunResult:
+    """Stage 5a: baseline trust, checked BEFORE compute: fail-closed must
+    not waste a cluster run (reference baseline_state.py:138-170).  Returns
+    the usable snapshot (None when absent or degraded), the trust verdict
+    and the warnings so far, or the contract-error result."""
+    if not cfg.baseline_path:
+        return None, bl.Trust(False, "no baseline configured"), []
+    snapshot, trust = bl.load_baseline(cfg.baseline_path)
+    if trust.trusted:
+        return snapshot, trust, []
+    if snapshot is None and trust.reason == "baseline missing":
+        return None, trust, ["baseline missing: diff/drift disabled"]
+    if cfg.gating and not cfg.update_baseline:
+        # fail closed: untrusted baseline + gating requested
+        report = {
+            "report_schema_version": REPORT_SCHEMA_VERSION,
+            "meta": _meta(cfg),
+            "error": f"CONTRACT_ERROR: {trust.reason}",
+        }
+        return RunResult(EXIT_CONTRACT_ERROR, report, "", "")
+    return None, trust, [f"untrusted baseline ({trust.reason}): degraded"]
+
+
+def _discover(spark: SparkSession, cfg: RunConfig, snapshot: dict | None) -> _Inputs:
+    """Read and validate the inputs, list the partitions and sign them."""
     validate_data_dir(cfg.data_dir)
     clips = read_clips(spark, cfg.data_dir)
     validate_clips_schema(clips)
-    from codeclone_spark.operators.schema_diff import canonical_schema, schema_diff
-
     current_schema = canonical_schema(clips)
     fixtures_meta = read_fixtures_meta(spark, cfg.data_dir)
     fixtures_pcm = read_fixtures_pcm(spark, cfg.data_dir)
@@ -294,6 +411,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         all_parts = sorted(
             r["part"] for r in clips.select("part").distinct().collect()
         )
+    lane_parts: set[str] = set()
+    if cfg.test_lane_pattern:
+        lane_rx = re.compile(cfg.test_lane_pattern)
+        lane_parts = {p for p in all_parts if lane_rx.search(p)}
     # Resume validity = ledger entry exists AND the partition's data
     # signature still matches AND the entry's known/new split was computed
     # against the SAME accepted set (reference cache-probe semantics,
@@ -316,23 +437,29 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     )
     # Baseline identity for the ledger's known/new split validity: sidecar
     # baselines carry their own streamed sha, inline sets hash here.
+    accepted_ref = (snapshot or {}).get("accepted_ref") or {}
     accepted_sha = (
-        accepted_ref["sha256"][:16] if accepted_ref else accepted_set_sha(accepted)
+        accepted_ref["sha256"][:16]
+        if accepted_ref
+        else accepted_set_sha((snapshot or {}).get("accepted_violations", []))
     )
-    _mark("discovery")
-    done = ledger.done_parts(data_sigs, accepted_sha) & set(all_parts)
-    todo = [p for p in all_parts if p not in done]
-    resumed = len(done)
+    return _Inputs(
+        clips, fixtures_meta, fixtures_pcm, current_schema,
+        all_parts, lane_parts, data_sigs, accepted_sha,
+    )
 
-    waves_dir = os.path.join(cfg.out_dir, "waves")
 
-    # Accepted-violation keys join once per wave to split true violation
-    # counts into known/new BEFORE the exemplar cap, so gate arithmetic
-    # never sees truncated counts (stage 5b reuses it).  Inline sets are a
-    # driver-literal broadcast; sidecar sets (large debt) are a parquet scan
-    # joined distributively — the keys never materialize on the driver.
+def _accepted_frame(spark: SparkSession, cfg: RunConfig, snapshot: dict | None) -> DataFrame:
+    """(vkey, accepted) rows of the baseline's accepted violations.
+
+    Accepted-violation keys join once per wave to split true violation
+    counts into known/new BEFORE the exemplar cap, so gate arithmetic
+    never sees truncated counts (stage 5b reuses it).  Inline sets are a
+    driver-literal broadcast; sidecar sets (large debt) are a parquet scan
+    joined distributively — the keys never materialize on the driver."""
+    accepted_ref = (snapshot or {}).get("accepted_ref") or {}
     if accepted_ref:
-        acc_df = (
+        return (
             spark.read.parquet(
                 os.path.join(
                     os.path.dirname(cfg.baseline_path) or ".",
@@ -342,476 +469,408 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             .select("vkey")
             .withColumn("accepted", F.lit(True))
         )
-    else:
-        acc_df = F.broadcast(
-            local_frame(
-                spark, [(k,) for k in accepted] or [("\x00never",)], "vkey string"
-            ).withColumn("accepted", F.lit(True))
-        )
+    accepted = sorted((snapshot or {}).get("accepted_violations", []))
+    return F.broadcast(
+        local_frame(
+            spark, [(k,) for k in accepted] or [("\x00never",)], "vkey string"
+        ).withColumn("accepted", F.lit(True))
+    )
 
-    # --- stages 3-4 per wave
-    for wave in _chunks(todo, cfg.wave_size):
-        wave_id = hashlib.sha1("|".join(wave).encode()).hexdigest()[:12]
-        wave_path = os.path.join(waves_dir, f"wave-{wave_id}")
-        facts, decoded = build_facts(clips, fixtures_meta, fixtures_pcm, parts=wave)
-        facts = facts.persist()
 
-        wave_t0 = time.monotonic()
-        viol = evaluate_row_rules(facts)
-        # Exemplar cap = OUTPUT bound only (reference max_blocks/max_segments
-        # caps, SURVEY §2.8).  True per-(rule, partition) counts — including
-        # the baseline-accepted split — are aggregated from the UNCAPPED
-        # frame in the same pass as the exemplar digest, so gate verdicts,
-        # report totals and ledger metrics never see truncated numbers.
-        # --update-baseline bypasses the cap: accepted keys must be complete.
-        # cap in (0, None) = capping disabled (0 kept its historical
-        # "uncapped" meaning; a run that truly wants zero exemplar rows
-        # should post-filter the violations output, not zero the cap)
-        cap = None if (cfg.update_baseline or not cfg.exemplar_cap) else cfg.exemplar_cap
-        viol = viol.withColumn("vkey", violation_key(viol)).join(
-            acc_df, "vkey", "left"
-        )
-        w = Window.partitionBy("rule_id", "partition").orderBy(
-            "clip_id", "observed"
-        )
-        viol = viol.withColumn("_rk", F.row_number().over(w))
-        keep = F.lit(True) if cap is None else (F.col("_rk") <= cap)
-        viol = viol.withColumn("_keep", keep).persist()
-        # ONE aggregation: true counts + new-vs-known split + suppressed +
-        # per-(partition, rule) exemplar digest (digest input bounded by cap).
-        def _collect_rule_stats():
-            return (
-                viol.groupBy("partition", "rule_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_viol"),
-                    F.sum(
-                        F.when(F.col("accepted").isNull(), 1).otherwise(0)
-                    ).alias("n_new"),
-                    F.sum(F.col("_keep").cast("long")).alias("n_kept"),
-                    F.sha2(
-                        F.concat_ws(
-                            ";",
-                            F.sort_array(
-                                F.collect_list(
-                                    F.when(
-                                        F.col("_keep"),
-                                        F.concat_ws(
-                                            "|", "rule_id", "clip_id", "observed"
-                                        ),
-                                    )
-                                )
-                            ),
-                        ),
-                        256,
-                    ).alias("digest"),
-                )
-                .collect()
-            )
+def _run_wave(
+    cfg: RunConfig, ledger: Ledger, inp: _Inputs, acc_df: DataFrame, wave: list[str], clock: _Phases
+) -> None:
+    """Stages 3-4 for one wave: facts, row rules and the partition partials,
+    committed to the ledger together with the wave's exemplar rows."""
+    wave_id = hashlib.sha1("|".join(wave).encode()).hexdigest()[:12]
+    wave_path = os.path.join(cfg.out_dir, "waves", f"wave-{wave_id}")
+    facts, decoded = build_facts(
+        inp.clips, inp.fixtures_meta, inp.fixtures_pcm, parts=wave
+    )
+    facts = facts.persist()
 
-        def _write_wave_viol() -> None:
-            (
-                viol.filter(F.col("_keep"))
-                .drop("vkey", "accepted", "_rk", "_keep")
-                .repartition(1 if len(wave) <= 8 else 8)
-                .write.mode("overwrite")
-                .parquet(os.path.join(wave_path, "violations"))
-            )
+    wave_t0 = time.monotonic()
+    rule_stats = _wave_row_rules(cfg, facts, acc_df, wave, wave_path)
+    clock.mark("wave_facts_and_row_rules")
 
-        # Independent consumers of the cached viol frame (stats collect +
-        # exemplar write): overlap them so the second job back-fills the
-        # first's tail (guide §2.6).  Both may fill the persist, and on a
-        # multi-executor cluster each may compute a partition on its own,
-        # so `_rk` can break ties differently in the two jobs.  That is
-        # safe without a cache-filling action first: `_rk` ties only rows
-        # equal on (rule_id, partition, clip_id, observed), and `expected`
-        # and `severity` are per-rule literals, so tied rows are identical
-        # in every written column (and in vkey/accepted, derived from
-        # them).  Any tie-break keeps the same multiset of rows, so the
-        # digest always matches the exemplars written (pinned by
-        # test_capped_digest_matches_written_rows_with_tied_clip_ids).
-        with ThreadPoolExecutor(max_workers=2) as _wpool:
-            _f_stats = _wpool.submit(_collect_rule_stats)
-            _f_write = _wpool.submit(_write_wave_viol)
-            rule_stats = _f_stats.result()
-            _f_write.result()
-        viol.unpersist()
-        _mark("wave_facts_and_row_rules")
-
-        # The two remaining wave aggregations (main partition aggregates +
-        # quantile-sketch partials) both read the already-filled facts
-        # cache and are independent — overlap them (guide §2.6); see
-        # rules.qsk_bin for why the sketch is a separate groupBy.
-        with ThreadPoolExecutor(max_workers=2) as _apool:
-            _f_aggs = _apool.submit(
-                lambda: partition_aggregates(facts).collect()
-            )
-            _f_qsk = _apool.submit(
-                lambda: qsketch_counts_multi(
-                    facts, NUMERIC_STATS_COLUMNS
-                ).collect()
-            )
-            aggs = _f_aggs.result()
-            _qsk_rows = _f_qsk.result()
-        nbins_by_col = {s.name: s.nbins for s in NUMERIC_STATS_COLUMNS}
-        qsk_by_col: dict[str, dict[str, list[int]]] = {
-            s.name: {} for s in NUMERIC_STATS_COLUMNS
-        }
-        for r in _qsk_rows:
-            col_arr = qsk_by_col[r["col"]]
-            arr = col_arr.setdefault(
-                r["part"], [0] * nbins_by_col[r["col"]]
-            )
-            arr[int(r["bin"])] = int(r["n"])
-        _mark("wave_partition_aggs")
-        # fold per-rule stats into per-partition ledger fields (driver-side,
-        # wave-sized): true counts, suppressed exemplars, stable digest
-        part_rules: dict[str, dict[str, list[int]]] = {}
-        part_supp: dict[str, int] = {}
-        part_dig_parts: dict[str, list[str]] = {}
-        for r in rule_stats:
-            p = r["partition"]
-            part_rules.setdefault(p, {})[r["rule_id"]] = [
-                int(r["n_viol"]), int(r["n_new"])
-            ]
-            part_supp[p] = part_supp.get(p, 0) + int(r["n_viol"] - r["n_kept"])
-            part_dig_parts.setdefault(p, []).append(
-                f"{r['rule_id']}:{r['digest']}"
-            )
-        vdig = {
-            p: (
-                hashlib.sha256(";".join(sorted(parts)).encode()).hexdigest(),
-                sum(v[0] for v in part_rules[p].values()),
-            )
-            for p, parts in part_dig_parts.items()
-        }
-        wave_elapsed_ms = int((time.monotonic() - wave_t0) * 1000)
-        seen_parts = set()
-        for row in aggs:
-            d = row.asDict()
-            part = d.pop("part")
-            seen_parts.add(part)
-            dig, nviol = vdig.get(part, ("0" * 64, 0))
-            ledger.record(
-                part,
-                {
-                    "wave": f"wave-{wave_id}",
-                    "data_sig": data_sigs.get(part, "absent"),
-                    "baseline_sha": accepted_sha,
-                    "rows": d["rows"],
-                    "transcript_null": d["transcript_null"],
-                    "undecodable": d["undecodable"],
-                    "approx_ndv": d["approx_ndv"],
-                    "dur_hist": [int(x) for x in d["dur_hist"]],
-                    "colstats": {
-                        spec.name: {
-                            "null": int(d[f"{spec.name}_null"]),
-                            "min": d[f"{spec.name}_min"],
-                            "max": d[f"{spec.name}_max"],
-                            "mean": (
-                                float(d[f"{spec.name}_mean"])
-                                if d[f"{spec.name}_mean"] is not None
-                                else None
-                            ),
-                            "qsk": qsk_by_col[spec.name].get(
-                                part, [0] * spec.nbins
-                            ),
-                        }
-                        for spec in NUMERIC_STATS_COLUMNS
-                    },
-                    "sr_counts": {
-                        str(v): int(d[f"sr_{v}"]) for v in ALLOWED_SR
-                    },
-                    "violations": int(nviol),
-                    "suppressed": int(part_supp.get(part, 0)),
-                    "rule_counts": part_rules.get(part, {}),
-                    "digest": dig,
-                    "elapsed_ms": wave_elapsed_ms,  # wave wall (shared)
+    # The two remaining wave aggregations (main partition aggregates +
+    # quantile-sketch partials) both read the already-filled facts
+    # cache and are independent — overlap them (guide §2.6); see
+    # rules.qsk_bin for why the sketch is a separate groupBy.
+    aggs, qsk_rows = _overlap(
+        lambda: partition_aggregates(facts).collect(),
+        lambda: qsketch_counts_multi(facts, NUMERIC_STATS_COLUMNS).collect(),
+    )
+    nbins_by_col = {s.name: s.nbins for s in NUMERIC_STATS_COLUMNS}
+    qsk: dict[tuple[str, str], list[int]] = {}  # (col, part) -> bin counts
+    for r in qsk_rows:
+        arr = qsk.setdefault((r["col"], r["part"]), [0] * nbins_by_col[r["col"]])
+        arr[int(r["bin"])] = int(r["n"])
+    clock.mark("wave_partition_aggs")
+    # fold per-rule stats into per-partition ledger fields (driver-side,
+    # wave-sized): true counts, suppressed exemplars, stable digest
+    stats_by_part: dict[str, list[Any]] = {}
+    for r in rule_stats:
+        stats_by_part.setdefault(r["partition"], []).append(r)
+    wave_elapsed_ms = int((time.monotonic() - wave_t0) * 1000)
+    aggs_by_part = {row["part"]: row.asDict() for row in aggs}
+    for part in wave:
+        stats = stats_by_part.get(part, [])
+        ledger.record(
+            part,
+            {
+                "wave": f"wave-{wave_id}",
+                "data_sig": inp.data_sigs.get(part, "absent"),
+                "baseline_sha": inp.accepted_sha,
+                **_partition_partials(aggs_by_part.get(part, {}), qsk, part),
+                "violations": sum(int(r["n_viol"]) for r in stats),
+                "suppressed": sum(int(r["n_viol"] - r["n_kept"]) for r in stats),
+                "rule_counts": {
+                    r["rule_id"]: [int(r["n_viol"]), int(r["n_new"])] for r in stats
                 },
+                "digest": (
+                    _fold_digests(f"{r['rule_id']}:{r['digest']}" for r in stats)
+                    if stats
+                    else "0" * 64
+                ),
+                "elapsed_ms": wave_elapsed_ms,  # wave wall (shared)
+            },
+        )
+    facts.unpersist()
+    decoded.unpersist()
+    ledger.save()  # durable commit point: wave outputs + entries together
+    clock.mark("wave_ledger_digests")
+
+
+def _wave_row_rules(
+    cfg: RunConfig, facts: DataFrame, acc_df: DataFrame, wave: list[str], wave_path: str
+) -> list[Any]:
+    """Row-rule violations of one wave: writes the capped exemplar rows and
+    returns the per-(partition, rule) stats rows."""
+    viol = evaluate_row_rules(facts)
+    # Exemplar cap = OUTPUT bound only (reference max_blocks/max_segments
+    # caps, SURVEY §2.8).  True per-(rule, partition) counts — including
+    # the baseline-accepted split — are aggregated from the UNCAPPED
+    # frame in the same pass as the exemplar digest, so gate verdicts,
+    # report totals and ledger metrics never see truncated numbers.
+    # --update-baseline bypasses the cap: accepted keys must be complete.
+    # cap in (0, None) = capping disabled (0 kept its historical
+    # "uncapped" meaning; a run that truly wants zero exemplar rows
+    # should post-filter the violations output, not zero the cap)
+    cap = None if (cfg.update_baseline or not cfg.exemplar_cap) else cfg.exemplar_cap
+    viol = viol.withColumn("vkey", violation_key(viol)).join(
+        acc_df, "vkey", "left"
+    )
+    w = Window.partitionBy("rule_id", "partition").orderBy(
+        "clip_id", "observed"
+    )
+    viol = viol.withColumn("_rk", F.row_number().over(w))
+    keep = F.lit(True) if cap is None else (F.col("_rk") <= cap)
+    viol = viol.withColumn("_keep", keep).persist()
+    # ONE aggregation: true counts + new-vs-known split + suppressed +
+    # per-(partition, rule) exemplar digest (digest input bounded by cap).
+    stats = viol.groupBy("partition", "rule_id").agg(
+        F.count(F.lit(1)).alias("n_viol"),
+        _count_null("accepted").alias("n_new"),
+        F.sum(F.col("_keep").cast("long")).alias("n_kept"),
+        _sorted_digest(
+            F.when(F.col("_keep"), F.concat_ws("|", "rule_id", "clip_id", "observed"))
+        ).alias("digest"),
+    )
+    exemplars = (
+        viol.filter(F.col("_keep"))
+        .drop("vkey", "accepted", "_rk", "_keep")
+        .repartition(1 if len(wave) <= 8 else 8)
+        .write.mode("overwrite")
+    )
+    # Independent consumers of the cached viol frame (stats collect +
+    # exemplar write): overlap them so the second job back-fills the
+    # first's tail (guide §2.6).  Both may fill the persist, and on a
+    # multi-executor cluster each may compute a partition on its own,
+    # so `_rk` can break ties differently in the two jobs.  That is
+    # safe without a cache-filling action first: `_rk` ties only rows
+    # equal on (rule_id, partition, clip_id, observed), and `expected`
+    # and `severity` are per-rule literals, so tied rows are identical
+    # in every written column (and in vkey/accepted, derived from
+    # them).  Any tie-break keeps the same multiset of rows, so the
+    # digest always matches the exemplars written (pinned by
+    # test_capped_digest_matches_written_rows_with_tied_clip_ids).
+    rule_stats, _ = _overlap(
+        stats.collect,
+        lambda: exemplars.parquet(os.path.join(wave_path, "violations")),
+    )
+    viol.unpersist()
+    return rule_stats
+
+
+def _partition_partials(
+    agg: dict[str, Any], qsk: dict[tuple[str, str], list[int]], part: str
+) -> dict[str, Any]:
+    """The mergeable stats fields of *part*'s ledger entry, from its
+    partition_aggregates row *agg* and the wave's quantile-sketch counts.
+    A listed part= directory with ZERO rows produces no aggregate row; it
+    still needs a ledger entry or every resume would KeyError on it and
+    the run could never converge, so with ``agg == {}`` every field takes
+    its zero default."""
+    return {
+        "rows": agg.get("rows", 0),
+        "transcript_null": agg.get("transcript_null", 0),
+        "undecodable": agg.get("undecodable", 0),
+        "approx_ndv": agg.get("approx_ndv", 0),
+        "dur_hist": [
+            int(x) for x in agg.get("dur_hist", [0] * (len(DUR_BIN_EDGES) - 1))
+        ],
+        "colstats": {
+            spec.name: {
+                "null": int(agg.get(f"{spec.name}_null", 0)),
+                "min": agg.get(f"{spec.name}_min"),
+                "max": agg.get(f"{spec.name}_max"),
+                "mean": (
+                    float(agg[f"{spec.name}_mean"])
+                    if agg.get(f"{spec.name}_mean") is not None
+                    else None
+                ),
+                "qsk": qsk.get((spec.name, part), [0] * spec.nbins),
+            }
+            for spec in NUMERIC_STATS_COLUMNS
+        },
+        "sr_counts": {str(v): int(agg.get(f"sr_{v}", 0)) for v in ALLOWED_SR},
+    }
+
+
+def _read_ledger(ledger: Ledger, all_parts: list[str], lane_parts: set[str]) -> _LedgerView:
+    """One pass over the ledger entries of the listed partitions."""
+    view = _LedgerView()
+    entries = []
+    for p in all_parts:
+        e = ledger.partitions.get(p)
+        view.part_rows.append((p, int((e or {}).get("rows", 0))))
+        if e is None:
+            continue  # missing-from-ledger guard (a part listed but never processed)
+        entries.append(e)
+        if "wave" in e:
+            view.wave_parts.setdefault(e["wave"], []).append(p)
+        for rid, (nv, nn) in sorted(e.get("rule_counts", {}).items()):
+            view.count_rows.append((p, rid, int(nv), int(nn)))
+            view.rule_counts[rid] = view.rule_counts.get(rid, 0) + int(nv)
+        view.suppressed += int(e.get("suppressed", 0))
+        if p in lane_parts:
+            view.rows_test_lane += int(e.get("rows", 0))
+    view.table_stats = merge_partials(entries)
+    # table-level quantiles per registry column from the merged fixed-bin
+    # sketches (mergeable across waves/resumes — the ledger never rescans
+    # completed partitions)
+    colstats = view.table_stats.get("colstats", {})
+    view.quantiles = {
+        spec.name: {
+            p: bl.sketch_quantile(
+                colstats.get(spec.name, {}).get("qsk", []), spec.bin_width, q
             )
-        # A listed part= directory with ZERO rows produces no aggregate row;
-        # it still needs a ledger entry or every resume would KeyError on it
-        # and the run could never converge.
-        for part in wave:
-            if part not in seen_parts:
-                ledger.record(
-                    part,
-                    {
-                        "wave": f"wave-{wave_id}",
-                        "data_sig": data_sigs.get(part, "absent"),
-                        "baseline_sha": accepted_sha,
-                        "rows": 0,
-                        "transcript_null": 0,
-                        "undecodable": 0,
-                        "approx_ndv": 0,
-                        "dur_hist": [0] * (len(DUR_BIN_EDGES) - 1),
-                        "colstats": {
-                            spec.name: {
-                                "null": 0,
-                                "min": None,
-                                "max": None,
-                                "mean": None,
-                                "qsk": [0] * spec.nbins,
-                            }
-                            for spec in NUMERIC_STATS_COLUMNS
-                        },
-                        "sr_counts": {str(v): 0 for v in ALLOWED_SR},
-                        "violations": 0,
-                        "suppressed": 0,
-                        "rule_counts": {},
-                        "digest": "0" * 64,
-                        "elapsed_ms": wave_elapsed_ms,
-                    },
-                )
-        facts.unpersist()
-        decoded.unpersist()
-        ledger.save()  # durable commit point: wave outputs + entries together
-        _mark("wave_ledger_digests")
+            for p, q in (("p50", 0.5), ("p95", 0.95), ("p99", 0.99))
+        }
+        for spec in NUMERIC_STATS_COLUMNS
+    }
+    return view
 
-    # missing-from-ledger guard (a part listed but never processed)
-    entries = [ledger.partitions[p] for p in all_parts if p in ledger.partitions]
-    table_stats = merge_partials(entries)
 
-    # --- stage 4c: global exact uniqueness — column-pruned scan over ALL
-    # partitions (dups can span waves/partitions; reading 2 string cols of a
-    # 100 TB table is cheap relative to decode, and Catalyst prunes to just
-    # those columns — verified in tests via ReadSchema).
+def _uniqueness(clips: DataFrame) -> tuple[int, DataFrame]:
+    """Stage 4c: global exact uniqueness — column-pruned scan over ALL
+    partitions (dups can span waves/partitions; reading 2 string cols of a
+    100 TB table is cheap relative to decode, and Catalyst prunes to just
+    those columns — verified in tests via ReadSchema)."""
     ids_only = clips.select("clip_id", "part")
     approx_ndv = ids_only.agg(
         F.approx_count_distinct("clip_id").alias("ndv")
     ).collect()[0]["ndv"]
-    dup_groups = (
-        ids_only
-        .groupBy("clip_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("part").alias("partition"))
-        .filter(F.col("n") > 1)
-    )
     # Persisted: the report phase runs three independent actions over this
     # frame (review-queue top-k, violations write, verdicts write) and each
     # would otherwise re-scan the full corpus ids and redo the dup groupBy;
     # the frame itself is tiny (dup exemplars only).  Unpersisted after the
     # final writes.
-    uniq_viol = dup_groups.select(
-        F.lit("uniq:clip_id").alias("rule_id"),
+    return approx_ndv, evaluate_uniqueness(ids_only).persist()
+
+
+def _neardup(
+    spark: SparkSession, cfg: RunConfig, ledger: Ledger, inp: _Inputs, snapshot: dict | None
+) -> _NearDup:
+    """Stage 4d (opt-in): near-dup transcript clone groups — the
+    reference's core clone-group loop (pairwise matches -> transitive
+    groups -> baseline diff -> fail-on-new gate, baseline/diff.py:23-32 +
+    report/document/findings.py:96-115) over the composed dedup ladder.
+    Clusters are keyed "<min_member_id>|<size>" (the sorted-group-id
+    convention, clone_baseline.py:511-527; SIZE is part of the identity,
+    so a cluster that grows or shrinks re-gates as NEW), diffed against
+    the baseline's accepted `clones` section, and surfaced as one
+    violation row per cluster plus ONE table-scope verdict (drift-rule
+    convention — clusters span partitions, so the dense per-partition
+    grid must not claim them; `partition` on the violation row is
+    min(part) for reporting only)."""
+    # The ladder (LSH -> exact verify -> connected components) is the
+    # run's most expensive stage and is CORPUS-GLOBAL, so it gets its
+    # own signature-keyed resume: the baseline-independent cluster
+    # frame (cluster_id, size, partition) is materialized once per
+    # (corpus data signature, ladder config) and reused on re-runs —
+    # only the cheap known/new join against the baseline's clones
+    # section re-derives (a baseline accept cycle must NOT force a
+    # re-cluster; neither must a crash between sinks).  The ledger
+    # entry rides a reserved pseudo-partition key (NUL byte — can't
+    # collide with a directory name) in the same append-only segments,
+    # and resume additionally demands the parquet _SUCCESS marker so a
+    # torn write never passes.
+    nd_key = "\x00neardup"
+    nd_scratch = os.path.join(cfg.out_dir, "neardup_scratch")
+    nd_clusters_path = os.path.join(cfg.out_dir, "neardup_clusters")
+    nd_sig = hashlib.sha256(
+        json.dumps(
+            {
+                "sigs": inp.data_sigs,
+                "threshold": cfg.neardup_threshold,
+                "max_bucket": cfg.neardup_max_bucket,
+            },
+            sort_keys=True,
+        ).encode()
+    ).hexdigest()
+    nd_prev = ledger.partitions.get(nd_key)
+    nd_resumed = bool(
+        nd_prev
+        and nd_prev.get("neardup_sig") == nd_sig
+        and os.path.exists(os.path.join(nd_clusters_path, "_SUCCESS"))
+    )
+    if not nd_resumed:
+        from codeclone_spark.operators.dedup import lsh_verified_pairs
+        from codeclone_spark.operators.graph import connected_components
+
+        ndocs = inp.clips.select(
+            F.col("clip_id").alias("doc_id"), "part", "transcript"
+        ).filter(
+            F.col("transcript").isNotNull() & (F.length("transcript") > 0)
+        )
+        # one scratch dir for the whole ladder: the verified-pairs
+        # stage materializes its LSH candidates there ("cands" —
+        # exchange reuse does NOT survive AQE at scale, see
+        # lsh_verified_pairs docstring) and connected_components roots
+        # its iteration there ("edges", "round=*", "labels") —
+        # filenames are disjoint by construction
+        nd_edges = lsh_verified_pairs(
+            ndocs,
+            "doc_id",
+            "transcript",
+            max_bucket=cfg.neardup_max_bucket or None,
+            threshold=cfg.neardup_threshold,
+            prefilter_hot=cfg.neardup_prefilter_hot,
+            scratch_dir=nd_scratch,
+        )
+        comps = connected_components(nd_edges, scratch_dir=nd_scratch)
+        comps.join(
+            ndocs.select(F.col("doc_id").alias("id"), "part"), "id"
+        ).groupBy("cluster_id").agg(
+            F.count(F.lit(1)).alias("size"),
+            F.min("part").alias("partition"),
+        ).write.mode("overwrite").parquet(nd_clusters_path)
+        ledger.record(nd_key, {"neardup_sig": nd_sig})
+        ledger.save("neardup")
+    accepted_clones = sorted(
+        ((snapshot or {}).get("clones") or {}).get(NEARDUP_RULE_ID, [])
+    )
+    acc_ck = F.broadcast(
+        local_frame(
+            spark,
+            [(k,) for k in accepted_clones] or [("\x00never",)],
+            "ckey string",
+        ).withColumn("known", F.lit(True))
+    )
+    # every consumer below (summary agg, violation sink, baseline
+    # keys) reads the materialized cluster frame — a tiny parquet
+    # scan + one broadcast join, no persist to leak
+    clusters = (
+        spark.read.parquet(nd_clusters_path)
+        .withColumn(
+            "ckey",
+            F.concat_ws("|", "cluster_id", F.col("size").cast("string")),
+        )
+        .join(acc_ck, "ckey", "left")
+    )
+    ndr = clusters.agg(
+        F.count(F.lit(1)).alias("n_clusters"),
+        F.coalesce(_count_null("known"), F.lit(0)).alias("n_new"),
+        F.coalesce(F.sum("size"), F.lit(0)).alias("n_members"),
+        F.coalesce(F.max("size"), F.lit(0)).alias("largest"),
+    ).collect()[0]
+    metrics = {
+        "resumed": nd_resumed,
+        "threshold": cfg.neardup_threshold,
+        "n_clusters": int(ndr["n_clusters"]),
+        "n_new": int(ndr["n_new"]),
+        "n_known": int(ndr["n_clusters"]) - int(ndr["n_new"]),
+        "n_members": int(ndr["n_members"]),
+        "largest_cluster": int(ndr["largest"]),
+    }
+    # observed carries only baseline-independent facts (size), so the
+    # run digest is stable across accept cycles — known/new lives in
+    # the verdict + metrics, exactly like the vkey-accepted rules
+    viol = clusters.select(
+        F.lit(NEARDUP_RULE_ID).alias("rule_id"),
         "partition",
-        "clip_id",
-        F.concat_ws("", F.lit("count="), F.col("n").cast("string")).alias("observed"),
-        F.lit("unique clip_id").alias("expected"),
-        F.lit(RULE_SEVERITY["uniq:clip_id"]).alias("severity"),
-    ).persist()
+        F.col("cluster_id").alias("clip_id"),
+        F.concat_ws(
+            "", F.lit("size="), F.col("size").cast("string")
+        ).alias("observed"),
+        F.lit("near-dup cluster accepted in baseline clones").alias(
+            "expected"
+        ),
+        F.lit(RULE_SEVERITY[NEARDUP_RULE_ID]).alias("severity"),
+    )
+    return _NearDup(clusters, viol, metrics)
 
-    # --- stage 4d (opt-in): near-dup transcript clone groups — the
-    # reference's core clone-group loop (pairwise matches -> transitive
-    # groups -> baseline diff -> fail-on-new gate, baseline/diff.py:23-32 +
-    # report/document/findings.py:96-115) over the composed dedup ladder.
-    # Clusters are keyed "<min_member_id>|<size>" (the sorted-group-id
-    # convention, clone_baseline.py:511-527; SIZE is part of the identity,
-    # so a cluster that grows or shrinks re-gates as NEW), diffed against
-    # the baseline's accepted `clones` section, and surfaced as one
-    # violation row per cluster plus ONE table-scope verdict (drift-rule
-    # convention — clusters span partitions, so the dense per-partition
-    # grid must not claim them; `partition` on the violation row is
-    # min(part) for reporting only).
-    neardup_viol = None
-    neardup_clusters = None
-    neardup_metrics: dict[str, Any] = {}
-    neardup_stats: tuple[int, int] | None = None
-    if cfg.neardup_transcript:
-        # The ladder (LSH -> exact verify -> connected components) is the
-        # run's most expensive stage and is CORPUS-GLOBAL, so it gets its
-        # own signature-keyed resume: the baseline-independent cluster
-        # frame (cluster_id, size, partition) is materialized once per
-        # (corpus data signature, ladder config) and reused on re-runs —
-        # only the cheap known/new join against the baseline's clones
-        # section re-derives (a baseline accept cycle must NOT force a
-        # re-cluster; neither must a crash between sinks).  The ledger
-        # entry rides a reserved pseudo-partition key (NUL byte — can't
-        # collide with a directory name) in the same append-only segments,
-        # and resume additionally demands the parquet _SUCCESS marker so a
-        # torn write never passes.
-        nd_key = "\x00neardup"
-        nd_scratch = os.path.join(cfg.out_dir, "neardup_scratch")
-        nd_clusters_path = os.path.join(cfg.out_dir, "neardup_clusters")
-        nd_sig = hashlib.sha256(
-            json.dumps(
-                {
-                    "sigs": data_sigs,
-                    "threshold": cfg.neardup_threshold,
-                    "max_bucket": cfg.neardup_max_bucket,
-                },
-                sort_keys=True,
-            ).encode()
-        ).hexdigest()
-        nd_prev = ledger.partitions.get(nd_key)
-        nd_resumed = bool(
-            nd_prev
-            and nd_prev.get("neardup_sig") == nd_sig
-            and os.path.exists(os.path.join(nd_clusters_path, "_SUCCESS"))
-        )
-        if not nd_resumed:
-            from codeclone_spark.operators.dedup import lsh_verified_pairs
-            from codeclone_spark.operators.graph import connected_components
 
-            ndocs = clips.select(
-                F.col("clip_id").alias("doc_id"), "part", "transcript"
-            ).filter(
-                F.col("transcript").isNotNull() & (F.length("transcript") > 0)
-            )
-            # one scratch dir for the whole ladder: the verified-pairs
-            # stage materializes its LSH candidates there ("cands" —
-            # exchange reuse does NOT survive AQE at scale, see
-            # lsh_verified_pairs docstring) and connected_components roots
-            # its iteration there ("edges", "round=*", "labels") —
-            # filenames are disjoint by construction
-            nd_edges = lsh_verified_pairs(
-                ndocs,
-                "doc_id",
-                "transcript",
-                max_bucket=cfg.neardup_max_bucket or None,
-                threshold=cfg.neardup_threshold,
-                prefilter_hot=cfg.neardup_prefilter_hot,
-                scratch_dir=nd_scratch,
-            )
-            comps = connected_components(nd_edges, scratch_dir=nd_scratch)
-            comps.join(
-                ndocs.select(F.col("doc_id").alias("id"), "part"), "id"
-            ).groupBy("cluster_id").agg(
-                F.count(F.lit(1)).alias("size"),
-                F.min("part").alias("partition"),
-            ).write.mode("overwrite").parquet(nd_clusters_path)
-            ledger.record(nd_key, {"neardup_sig": nd_sig})
-            ledger.save("neardup")
-        accepted_clones = sorted(
-            ((snapshot or {}).get("clones") or {}).get(NEARDUP_RULE_ID, [])
-        )
-        acc_ck = F.broadcast(
-            local_frame(
-                spark,
-                [(k,) for k in accepted_clones] or [("\x00never",)],
-                "ckey string",
-            ).withColumn("known", F.lit(True))
-        )
-        # every consumer below (summary agg, violation sink, baseline
-        # keys) reads the materialized cluster frame — a tiny parquet
-        # scan + one broadcast join, no persist to leak
-        neardup_clusters = (
-            spark.read.parquet(nd_clusters_path)
-            .withColumn(
-                "ckey",
-                F.concat_ws("|", "cluster_id", F.col("size").cast("string")),
-            )
-            .join(acc_ck, "ckey", "left")
-        )
-        ndr = neardup_clusters.agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.coalesce(
-                F.sum(F.when(F.col("known").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("n_new"),
-            F.coalesce(F.sum("size"), F.lit(0)).alias("n_members"),
-            F.coalesce(F.max("size"), F.lit(0)).alias("largest"),
-        ).collect()[0]
-        neardup_stats = (int(ndr["n_clusters"]), int(ndr["n_new"]))
-        neardup_metrics = {
-            "resumed": nd_resumed,
-            "threshold": cfg.neardup_threshold,
-            "n_clusters": int(ndr["n_clusters"]),
-            "n_new": int(ndr["n_new"]),
-            "n_known": int(ndr["n_clusters"]) - int(ndr["n_new"]),
-            "n_members": int(ndr["n_members"]),
-            "largest_cluster": int(ndr["largest"]),
-        }
-        # observed carries only baseline-independent facts (size), so the
-        # run digest is stable across accept cycles — known/new lives in
-        # the verdict + metrics, exactly like the vkey-accepted rules
-        neardup_viol = neardup_clusters.select(
-            F.lit(NEARDUP_RULE_ID).alias("rule_id"),
-            "partition",
-            F.col("cluster_id").alias("clip_id"),
-            F.concat_ws(
-                "", F.lit("size="), F.col("size").cast("string")
-            ).alias("observed"),
-            F.lit("near-dup cluster accepted in baseline clones").alias(
-                "expected"
-            ),
-            F.lit(RULE_SEVERITY[NEARDUP_RULE_ID]).alias("severity"),
-        )
-        _mark("neardup_clusters")
+def _counts(
+    spark: SparkSession, cfg: RunConfig, acc_df: DataFrame, uniq_viol: DataFrame,
+    view: _LedgerView, nd: _NearDup | None, directives: list[tuple[str, str]],
+) -> tuple[DataFrame, DataFrame, int]:
+    """Stage 5b: every violation row; the (partition, rule_id, n_viol,
+    n_new) counts of every finding, net of suppression directives,
+    persisted; and the number of new violations the directives allowlisted.
 
-    # Assemble row violations from the waves the ledger references — each
-    # wave dir FILTERED to the partitions the ledger assigns to it.  After a
-    # crash-resume, a partition can be re-processed in a new wave while its
-    # old wave's dir still holds stale rows for it; the filter makes resume
-    # idempotent (verified by test_resume_converges).
-    wave_parts: dict[str, list[str]] = {}
-    for p in all_parts:
-        e = ledger.partitions.get(p)
-        if e and "wave" in e:
-            wave_parts.setdefault(e["wave"], []).append(p)
-    wave_dfs = [
-        spark.read.parquet(os.path.join(waves_dir, w, "violations")).filter(
-            F.col("partition").isin(parts)
-        )
-        for w, parts in sorted(wave_parts.items())
-    ]
+    Row violations come from the waves the ledger references — each
+    wave dir FILTERED to the partitions the ledger assigns to it.  After a
+    crash-resume, a partition can be re-processed in a new wave while its
+    old wave's dir still holds stale rows for it; the filter makes resume
+    idempotent (verified by test_resume_converges).
+
+    Row-rule counts come from the ledger's TRUE per-(partition, rule)
+    tallies (aggregated before the exemplar cap in the wave pass); only the
+    table-scope uniqueness rule — which never passes through a wave — is
+    diffed here (broadcast anti-join, the reference's diff_clone_groups set
+    difference, baseline/diff.py:23-32)."""
     all_viol = uniq_viol
-    for wdf in wave_dfs:
-        all_viol = all_viol.unionByName(wdf)
-    if neardup_viol is not None:
-        all_viol = all_viol.unionByName(neardup_viol)
-
-    # --- stage 5b: baseline accepted-set diff.  Row-rule counts come from
-    # the ledger's TRUE per-(partition, rule) tallies (aggregated before the
-    # exemplar cap in the wave pass); only the table-scope uniqueness rule —
-    # which never passes through a wave — is diffed here (broadcast
-    # anti-join, the reference's diff_clone_groups set difference,
-    # baseline/diff.py:23-32).
-    # Near-dup rows never enter the vkey accepted set: their acceptance
-    # lives in the baseline `clones` section keyed "<min_id>|<size>" (a
-    # vkey lacks the size, so a grown cluster would silently stay accepted)
-    novkey = all_viol.filter(F.col("rule_id") != NEARDUP_RULE_ID)
-    keyed = novkey.withColumn("vkey", violation_key(novkey))
+    for w, parts in sorted(view.wave_parts.items()):
+        all_viol = all_viol.unionByName(
+            spark.read.parquet(os.path.join(cfg.out_dir, "waves", w, "violations")).filter(
+                F.col("partition").isin(parts)
+            )
+        )
+    if nd is not None:
+        all_viol = all_viol.unionByName(nd.viol)
     uniq_keyed = uniq_viol.withColumn("vkey", violation_key(uniq_viol))
     uniq_counts = (
         uniq_keyed.join(acc_df, "vkey", "left")
         .groupBy("partition", "rule_id")
         .agg(
             F.count(F.lit(1)).alias("n_viol"),
-            F.sum(
-                F.when(F.col("accepted").isNull(), 1).otherwise(0)
-            ).alias("n_new"),
+            _count_null("accepted").alias("n_new"),
         )
     )
-    row_count_tuples = [
-        (p, rid, int(nv), int(nn))
-        for p in all_parts
-        if p in ledger.partitions
-        for rid, (nv, nn) in sorted(
-            ledger.partitions[p].get("rule_counts", {}).items()
-        )
-    ]
     counts_schema = "partition string, rule_id string, n_viol long, n_new long"
     counts = uniq_counts.unionByName(
-        local_frame(spark, row_count_tuples, counts_schema)
+        local_frame(spark, view.count_rows, counts_schema)
     )
-    if neardup_stats is not None:
+    if nd is not None:
         # joins the counts frame so suppression directives and the review
         # queue treat clusters like any other finding; the dense verdict
         # grid drops the row (TABLE_SCOPE is not a partition) — the rule's
-        # single table-scope verdict is appended with the drift rows below
-        counts = counts.unionByName(
-            local_frame(
-                spark,
-                [
-                    (
-                        TABLE_SCOPE,
-                        NEARDUP_RULE_ID,
-                        neardup_stats[0],
-                        neardup_stats[1],
-                    )
-                ],
-                counts_schema,
-            )
-        )
+        # single table-scope verdict is appended with the drift rows
+        nd_row = (TABLE_SCOPE, NEARDUP_RULE_ID, nd.metrics["n_clusters"], nd.metrics["n_new"])
+        counts = counts.unionByName(local_frame(spark, [nd_row], counts_schema))
 
     # --- suppression directives: zero n_new for matching (rule, partition)
     # pairs (gate-level allowlist; the violation rows stay in the output)
@@ -837,40 +896,29 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     # after the final writes).  Its ledger-count and near-dup rows are
     # local_frame LocalRelations, scanned in the JVM: neither action starts
     # a Python worker.
-    counts = counts.persist()
-    _mark("uniqueness_and_ndv")
-    part_rows = local_frame(
-        spark,
-        [
-            (p, int(ledger.partitions.get(p, {}).get("rows", 0)))
-            for p in all_parts
-        ],
-        "part string, rows long",
-    )
-    lane_parts: set[str] = set()
-    if cfg.test_lane_pattern:
-        import re as _lane_re
+    return all_viol, counts.persist(), n_suppressed_directive
 
-        lane_rx = _lane_re.compile(cfg.test_lane_pattern)
-        lane_parts = {p for p in all_parts if lane_rx.search(p)}
-    verdicts = build_verdicts(
-        counts, part_rows, cfg.gates, set(accepted), test_lane=lane_parts
-    )
 
-    # table-level quantiles per registry column from the merged fixed-bin
-    # sketches (mergeable across waves/resumes — the ledger never rescans
-    # completed partitions)
-    colstats = table_stats.get("colstats", {})
-    quantiles_by_col = {
-        spec.name: {
-            p: bl.sketch_quantile(
-                colstats.get(spec.name, {}).get("qsk", []), spec.bin_width, q
-            )
-            for p, q in (("p50", 0.5), ("p95", 0.95), ("p99", 0.99))
-        }
-        for spec in NUMERIC_STATS_COLUMNS
-    }
+def _table_verdict(
+    rid: str, ok: bool, reason: str, new: bool | None = None
+) -> tuple[str, str, bool, str, str]:
+    """One table-scope verdict row; novelty is "new" when *new* is true,
+    which defaults to the gate failing.  A gate with nothing to compare
+    passes with the reason "<rid>: skipped (<why>)"."""
+    if new is None:
+        new = not ok
+    return (TABLE_SCOPE, rid, ok, reason, "new" if new else "known")
 
+
+def _table_verdicts(
+    spark: SparkSession, cfg: RunConfig, snapshot: dict | None, view: _LedgerView,
+    current_schema: dict[str, str], nd: _NearDup | None, directives: list[tuple[str, str]],
+    warnings: list[str],
+) -> tuple[DataFrame, dict[str, Any]]:
+    """One verdict row per table-scope gate (drift, schema evolution,
+    near-dup), plus the report's drift and schema metrics.  Appends a
+    warning for added (non-breaking) columns."""
+    table_stats = view.table_stats
     # --- drift (driver-side math on merged mergeable partials)
     drift_verdicts: list[tuple[str, str, bool, str, str]] = []
     drift_metrics: dict[str, float] = {}
@@ -893,18 +941,12 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             b_q = (snapshot["stats"].get(spec.name) or {}).get("quantiles") or {}
             if not b_q:
                 drift_verdicts.append(
-                    (
-                        TABLE_SCOPE,
-                        rid,
-                        True,
-                        f"{rid}: skipped (baseline has no quantiles)",
-                        "known",
-                    )
+                    _table_verdict(rid, True, f"{rid}: skipped (baseline has no quantiles)")
                 )
                 continue
             rel = 0.0
             for p in ("p50", "p95", "p99"):
-                bq, cq = b_q.get(p), quantiles_by_col[spec.name].get(p)
+                bq, cq = b_q.get(p), view.quantiles[spec.name].get(p)
                 if bq is not None and cq is not None:
                     # floor the denominator at one sketch bin: deltas below
                     # the sketch's resolution are not meaningful drift
@@ -918,11 +960,11 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
                 if ok
                 else f"{rid}: stat={val:.6f} exceeds max={mx:g}"
             )
-            drift_verdicts.append((TABLE_SCOPE, rid, ok, reason, "new" if not ok else "known"))
+            drift_verdicts.append(_table_verdict(rid, ok, reason))
     else:
         for rid in DRIFT_RULE_IDS:
             drift_verdicts.append(
-                (TABLE_SCOPE, rid, True, f"{rid}: skipped (no trusted baseline)", "known")
+                _table_verdict(rid, True, f"{rid}: skipped (no trusted baseline)")
             )
     # --- schema-evolution diff vs the snapshot (reference api_surface
     # comparison wired into baseline/diff.py:84-89: removed/type-change are
@@ -942,9 +984,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
                 if ok
                 else f"{rid}: {', '.join(changes)}"
             )
-            drift_verdicts.append(
-                (TABLE_SCOPE, rid, ok, reason, "known" if ok else "new")
-            )
+            drift_verdicts.append(_table_verdict(rid, ok, reason))
         if sdiff["added"]:
             warnings.append(
                 "schema: added columns (non-breaking): "
@@ -953,22 +993,16 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     else:
         for rid in SCHEMA_RULE_IDS:
             drift_verdicts.append(
-                (
-                    TABLE_SCOPE,
-                    rid,
-                    True,
-                    f"{rid}: skipped (no baseline schema)",
-                    "known",
-                )
+                _table_verdict(rid, True, f"{rid}: skipped (no baseline schema)")
             )
 
     # --- near-dup gate: ONE table-scope verdict, fail on NEW clusters
     # (reference fail_on_new semantics, surfaces/cli/execution.py); a
     # '*'-scoped suppression directive converts new clusters to accepted
     # debt exactly like the counts-frame rules (already tallied into
-    # n_suppressed_directive via the counts row above)
-    if neardup_stats is not None:
-        nd_n, nd_new = neardup_stats
+    # n_suppressed_directive via the counts row)
+    if nd is not None:
+        nd_n, nd_new = nd.metrics["n_clusters"], nd.metrics["n_new"]
         nd_supp = any(
             rid == NEARDUP_RULE_ID and part == "*" for rid, part in directives
         )
@@ -993,13 +1027,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
                 f"exceed budget (max_count={nd_budget})"
             )
         drift_verdicts.append(
-            (
-                TABLE_SCOPE,
-                NEARDUP_RULE_ID,
-                nd_ok,
-                nd_reason,
-                "new" if nd_eff > 0 else "known",
-            )
+            _table_verdict(NEARDUP_RULE_ID, nd_ok, nd_reason, new=nd_eff > 0)
         )
 
     drift_df = local_frame(
@@ -1008,14 +1036,16 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         "partition string, rule_id string, pass boolean, reason string, "
         "novelty string",
     )
-    verdicts = verdicts.unionByName(drift_df)
+    return drift_df, {"drift": drift_metrics, "schema": schema_metrics}
 
-    # --- derived triage queue: top-k (partition, rule) cells ranked by
-    # severity-weighted NEW-violation count (reference review-queue /
-    # hotlist surfaces, report/suggestions.py + report/document/derived.py,
-    # sorted (-count, id) like _findings_groups.py:231).  Computed as a
-    # distributed priority top-k over the counts frame — already net of
-    # suppression directives, so accepted/allowlisted debt never ranks.
+
+def _review_queue(counts: DataFrame) -> list[dict[str, Any]]:
+    """Derived triage queue: top-k (partition, rule) cells ranked by
+    severity-weighted NEW-violation count (reference review-queue /
+    hotlist surfaces, report/suggestions.py + report/document/derived.py,
+    sorted (-count, id) like _findings_groups.py:231).  Computed as a
+    distributed priority top-k over the counts frame — already net of
+    suppression directives, so accepted/allowlisted debt never ranks."""
     w_map = F.create_map(
         *[
             x
@@ -1033,7 +1063,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         .limit(REVIEW_QUEUE_K)
         .collect()
     )
-    review_queue = [
+    return [
         {
             "partition": r["partition"],
             "rule_id": r["rule_id"],
@@ -1045,106 +1075,81 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         for r in rq_rows
     ]
 
-    # --- stage 6: canonical, deterministically-ordered outputs
-    violations_path = os.path.join(cfg.out_dir, "violations")
-    verdicts_path = os.path.join(cfg.out_dir, "verdicts")
-    if cfg.partitioned_sinks:
+
+def _write_sink(df: DataFrame, path: str, keys: tuple[str, ...], partitioned: bool) -> None:
+    """Write one report sink with rows in a deterministic order of *keys*."""
+    if partitioned:
         # Cluster-scale sink shape: hash-distribute rows by rule_id
         # (Exchange hashpartitioning, never SinglePartition) and write a
         # rule_id=<id> directory per rule — parallel writers, and downstream
         # per-rule consumers prune at the directory level.  Rows stay
         # deterministically sorted WITHIN each rule; the run digest folds
         # per-rule digests, so it is independent of this layout change.
-        def _write_viol() -> None:
-            (
-                all_viol.repartition(F.col("rule_id"))
-                .sortWithinPartitions("rule_id", "partition", "clip_id", "observed")
-                .write.partitionBy("rule_id")
-                .mode("overwrite")
-                .parquet(violations_path)
-            )
-
-        def _write_verd() -> None:
-            (
-                verdicts.repartition(F.col("rule_id"))
-                .sortWithinPartitions("rule_id", "partition")
-                .write.partitionBy("rule_id")
-                .mode("overwrite")
-                .parquet(verdicts_path)
-            )
+        (
+            df.repartition(F.col("rule_id"))
+            .sortWithinPartitions("rule_id", *(k for k in keys if k != "rule_id"))
+            .write.partitionBy("rule_id")
+            .mode("overwrite")
+            .parquet(path)
+        )
     else:
         # repartition(1)+sortWithinPartitions = deterministic total order
         # without orderBy's range-sampling pre-job; right for the tiny
         # report tables a single-tenant run produces.
-        def _write_viol() -> None:
-            all_viol.repartition(1).sortWithinPartitions(
-                "rule_id", "partition", "clip_id", "observed"
-            ).write.mode("overwrite").parquet(violations_path)
+        df.repartition(1).sortWithinPartitions(*keys).write.mode(
+            "overwrite"
+        ).parquet(path)
 
-        def _write_verd() -> None:
-            verdicts.repartition(1).sortWithinPartitions(
-                "partition", "rule_id"
-            ).write.mode("overwrite").parquet(verdicts_path)
 
+def _write_sinks(cfg: RunConfig, all_viol: DataFrame, verdicts: DataFrame) -> tuple[str, str]:
+    """Stage 6: canonical, deterministically-ordered outputs."""
+    paths = (os.path.join(cfg.out_dir, "violations"), os.path.join(cfg.out_dir, "verdicts"))
+    viol_keys = ("rule_id", "partition", "clip_id", "observed")
     # The two sink jobs are independent (different inputs past the shared
-    # cached frames, different output dirs): submit both and let the second
-    # back-fill the first's straggler tail (guide §2.6 overlapping
-    # independent jobs).  Each write's own commit protocol is untouched.
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        for _fut in [_pool.submit(_write_viol), _pool.submit(_write_verd)]:
-            _fut.result()
-    uniq_viol.unpersist()
-    counts.unpersist()
-    _mark("final_writes")
+    # cached frames, different output dirs): overlap them.  Each write's
+    # own commit protocol is untouched.
+    _overlap(
+        lambda: _write_sink(all_viol, paths[0], viol_keys, cfg.partitioned_sinks),
+        lambda: _write_sink(verdicts, paths[1], ("partition", "rule_id"), cfg.partitioned_sinks),
+    )
+    return paths
 
-    final_viol = spark.read.parquet(violations_path)
-    final_verd = spark.read.parquet(verdicts_path)
+
+def _report(
+    spark: SparkSession, cfg: RunConfig, clock: _Phases, paths: tuple[str, str], inp: _Inputs,
+    view: _LedgerView, *, resumed: int, approx_ndv: int, n_supp_directive: int,
+    review_queue: list[dict[str, Any]], gate_metrics: dict[str, Any], nd: _NearDup | None,
+    trust: bl.Trust, warnings: list[str],
+) -> dict[str, Any]:
+    """Stage 6 (report): the canonical report document, written to
+    report.json with its integrity digests."""
+    final_viol = spark.read.parquet(paths[0])
+    final_verd = spark.read.parquet(paths[1])
     # ONE aggregation serves exemplar counts AND the run digest: per-rule
     # (count, digest-over-sorted-rows), folded into a global digest on the
     # driver (batched report collects — one job instead of two).
     rule_rows = final_viol.groupBy("rule_id").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sha2(
-            F.concat_ws(
-                ";",
-                F.sort_array(
-                    F.collect_list(
-                        F.concat_ws("|", "rule_id", "partition", "clip_id", "observed")
-                    )
-                ),
-            ),
-            256,
+        _sorted_digest(
+            F.concat_ws("|", "rule_id", "partition", "clip_id", "observed")
         ).alias("digest"),
     ).collect()
     exemplar_counts = {r["rule_id"]: r["n"] for r in rule_rows}
-    run_digest = hashlib.sha256(
-        ";".join(
-            sorted(f"{r['rule_id']}:{r['digest']}" for r in rule_rows)
-        ).encode()
-    ).hexdigest()
+    run_digest = _fold_digests(f"{r['rule_id']}:{r['digest']}" for r in rule_rows)
     # True totals: ledger tallies (pre-cap) for row rules + the uncapped
-    # table-scope uniqueness rows from the written output.
-    rule_counts: dict[str, int] = {}
-    for p in all_parts:
-        for rid, (nv, _nn) in ledger.partitions.get(p, {}).get(
-            "rule_counts", {}
-        ).items():
-            rule_counts[rid] = rule_counts.get(rid, 0) + int(nv)
-    if "uniq:clip_id" in exemplar_counts:
-        rule_counts["uniq:clip_id"] = exemplar_counts["uniq:clip_id"]
-    if NEARDUP_RULE_ID in exemplar_counts:
-        # one row per cluster, written uncapped like uniq:clip_id
-        rule_counts[NEARDUP_RULE_ID] = exemplar_counts[NEARDUP_RULE_ID]
+    # table-scope uniqueness rows from the written output (near-dup: one
+    # row per cluster, written uncapped like uniq:clip_id).
+    rule_counts = dict(view.rule_counts)
+    for rid in ("uniq:clip_id", NEARDUP_RULE_ID):
+        if rid in exemplar_counts:
+            rule_counts[rid] = exemplar_counts[rid]
     n_viol_total = sum(rule_counts.values())
     by_severity: dict[str, int] = {}
     for rid, n in rule_counts.items():
         sev = RULE_SEVERITY.get(rid, "error")
         by_severity[sev] = by_severity.get(sev, 0) + int(n)
-    n_suppressed = sum(
-        int(ledger.partitions.get(p, {}).get("suppressed", 0)) for p in all_parts
-    )
-    failed = [
-        (r["partition"], r["rule_id"], r["reason"])
+    failed_gates = [
+        {"partition": r["partition"], "rule_id": r["rule_id"], "reason": r["reason"]}
         for r in final_verd.filter(~F.col("pass")).orderBy("partition", "rule_id").collect()
     ]
 
@@ -1153,32 +1158,24 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         "clip_id_exact_dup_groups": int(rule_counts.get("uniq:clip_id", 0)),
     }
 
-    stats_doc: dict[str, Any] = {
-        spec.name: {
-            "count": table_stats.get("rows", 0),
-            "null_permille": round(
-                1000.0
-                * colstats.get(spec.name, {}).get("null", 0)
-                / max(table_stats.get("rows", 1), 1),
-                3,
-            ),
-            "min": colstats.get(spec.name, {}).get("min"),
-            "max": colstats.get(spec.name, {}).get("max"),
-            "mean": colstats.get(spec.name, {}).get("mean"),
-            "quantiles": quantiles_by_col[spec.name],
+    table_stats = view.table_stats
+    rows = table_stats.get("rows", 0)
+    stats_doc: dict[str, Any] = {}
+    for spec in NUMERIC_STATS_COLUMNS:
+        cs = table_stats.get("colstats", {}).get(spec.name, {})
+        stats_doc[spec.name] = {
+            "count": rows,
+            "null_permille": round(1000.0 * cs.get("null", 0) / max(rows, 1), 3),
+            "min": cs.get("min"),
+            "max": cs.get("max"),
+            "mean": cs.get("mean"),
+            "quantiles": view.quantiles[spec.name],
         }
-        for spec in NUMERIC_STATS_COLUMNS
-    }
-    stats_doc |= {
-        "transcript": {
-            "count": table_stats.get("rows", 0),
-            "null_or_empty_permille": round(
-                1000.0
-                * table_stats.get("transcript_null", 0)
-                / max(table_stats.get("rows", 1), 1),
-                3,
-            ),
-        },
+    stats_doc["transcript"] = {
+        "count": rows,
+        "null_or_empty_permille": round(
+            1000.0 * table_stats.get("transcript_null", 0) / max(rows, 1), 3
+        ),
     }
     histograms = {
         "dur_ms": {"bin_edges": DUR_BIN_EDGES, "counts": table_stats.get("dur_hist", [])},
@@ -1192,37 +1189,31 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         "report_schema_version": REPORT_SCHEMA_VERSION,
         "meta": _meta(cfg),
         "inventory": {
-            "partitions": len(all_parts),
+            "partitions": len(inp.all_parts),
             "partitions_resumed": resumed,
-            "partitions_test_lane": len(lane_parts),
-            "rows": table_stats.get("rows", 0),
-            "rows_test_lane": sum(
-                int(ledger.partitions.get(p, {}).get("rows", 0))
-                for p in lane_parts
-            ),
+            "partitions_test_lane": len(inp.lane_parts),
+            "rows": rows,
+            "rows_test_lane": view.rows_test_lane,
         },
         "findings": {
             "total_violations": int(n_viol_total),
             # exemplar rows beyond the per-(rule, partition) cap are counted
             # here, never silently dropped (reference suppressed_* counts)
-            "suppressed_exemplars": int(n_suppressed),
+            "suppressed_exemplars": int(view.suppressed),
             # new violations allowlisted by suppression directives
-            "suppressed_by_directive": int(n_suppressed_directive),
+            "suppressed_by_directive": int(n_supp_directive),
             "by_rule": dict(sorted(rule_counts.items())),
             "by_severity": dict(sorted(by_severity.items())),
-            "failed_gates": [
-                {"partition": p, "rule_id": r, "reason": reason} for p, r, reason in failed
-            ],
+            "failed_gates": failed_gates,
         },
         "metrics": {
             "stats": stats_doc,
             "histograms": histograms,
             "uniqueness": uniqueness,
-            "drift": drift_metrics,
-            "schema": schema_metrics,
+            **gate_metrics,
             # 0-100 scalar + grade (reference metrics/health.py:95-162)
             "health": health.health_score(
-                rows=table_stats.get("rows", 0),
+                rows=rows,
                 violations=int(n_viol_total),
                 undecodable=int(table_stats.get("undecodable", 0)),
             ),
@@ -1230,13 +1221,16 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         "derived": {"review_queue": review_queue},
         "baseline": {"trusted": trust.trusted, "reason": trust.reason},
         "warnings": warnings,
-        "elapsed_sec": round(time.monotonic() - t0, 3),
-        "phases": {**phases, "report_aggs": round(time.monotonic() - _last[0], 3)},
+        "elapsed_sec": round(time.monotonic() - clock.t0, 3),
+        "phases": {
+            **clock.seconds,
+            "report_aggs": round(time.monotonic() - clock.last, 3),
+        },
     }
-    if cfg.neardup_transcript:
+    if nd is not None:
         # present only when the stage ran (report schema 1.2): absence
         # means "not computed", never "zero clusters"
-        report["metrics"]["neardup"] = neardup_metrics
+        report["metrics"]["neardup"] = nd.metrics
     body = _round_floats(
         {k: v for k, v in report.items() if k not in ("elapsed_sec", "phases")}
     )
@@ -1248,49 +1242,56 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     }
     with open(os.path.join(cfg.out_dir, "report.json"), "w") as f:
         json.dump(report, f, sort_keys=True, indent=1)
+    return report
 
-    # --- baseline update mode (§3.2: explicit governance action; gates not
-    # enforced against the snapshot just written)
-    if cfg.update_baseline and cfg.baseline_path:
-        distinct_keys = keyed.select("vkey").distinct()
-        n_keys = distinct_keys.count()
-        if n_keys > cfg.accepted_inline_max:
-            # large debt set: sorted parquet side table, written and
-            # digest-folded entirely executor-side (never O(keys) driver)
-            ref = bl.write_accepted_sidecar(distinct_keys, cfg.baseline_path)
-            all_keys: list[str] = []
-        else:
-            ref = None
-            all_keys = [
-                r["vkey"] for r in distinct_keys.orderBy("vkey").collect()
-            ]
-        # clones section: replace this run's family when the stage ran,
-        # CARRY FORWARD families from the prior snapshot otherwise — an
-        # update run with the stage disabled must not silently un-accept
-        # previously accepted clone groups.  Keys are one per clone GROUP
-        # (not per member; the reference inlines exactly these in its
-        # baseline JSON, clone_baseline.py:511-527), so the driver collect
-        # is group-cardinality — orders of magnitude below row counts.
-        clones_out = dict(((snapshot or {}).get("clones") or {}))
-        if cfg.neardup_transcript and neardup_clusters is not None:
-            clones_out[NEARDUP_RULE_ID] = sorted(
-                r["ckey"] for r in neardup_clusters.select("ckey").collect()
-            )
-        bl.write_baseline(
-            cfg.baseline_path,
-            stats=stats_doc,
-            histograms=histograms,
-            uniqueness=uniqueness,
-            accepted_violations=all_keys,
-            created_at=cfg.created_at,
-            schema={"columns": current_schema, "partition_keys": ["part"]},
-            accepted_ref=ref,
-            clones=clones_out,
+
+def _update_baseline(
+    cfg: RunConfig, snapshot: dict | None, inp: _Inputs, all_viol: DataFrame, nd: _NearDup | None,
+    report: dict[str, Any],
+) -> None:
+    """Baseline update mode (§3.2: explicit governance action; gates not
+    enforced against the snapshot just written)."""
+    # Near-dup rows never enter the vkey accepted set: their acceptance
+    # lives in the baseline `clones` section keyed "<min_id>|<size>" (a
+    # vkey lacks the size, so a grown cluster would silently stay accepted)
+    novkey = all_viol.filter(F.col("rule_id") != NEARDUP_RULE_ID)
+    keyed = novkey.withColumn("vkey", violation_key(novkey))
+    distinct_keys = keyed.select("vkey").distinct()
+    n_keys = distinct_keys.count()
+    if n_keys > cfg.accepted_inline_max:
+        # large debt set: sorted parquet side table, written and
+        # digest-folded entirely executor-side (never O(keys) driver)
+        ref = bl.write_accepted_sidecar(distinct_keys, cfg.baseline_path)
+        all_keys: list[str] = []
+    else:
+        ref = None
+        all_keys = [
+            r["vkey"] for r in distinct_keys.orderBy("vkey").collect()
+        ]
+    # clones section: replace this run's family when the stage ran,
+    # CARRY FORWARD families from the prior snapshot otherwise — an
+    # update run with the stage disabled must not silently un-accept
+    # previously accepted clone groups.  Keys are one per clone GROUP
+    # (not per member; the reference inlines exactly these in its
+    # baseline JSON, clone_baseline.py:511-527), so the driver collect
+    # is group-cardinality — orders of magnitude below row counts.
+    clones_out = dict(((snapshot or {}).get("clones") or {}))
+    if nd is not None:
+        clones_out[NEARDUP_RULE_ID] = sorted(
+            r["ckey"] for r in nd.clusters.select("ckey").collect()
         )
-        return RunResult(EXIT_OK, report, violations_path, verdicts_path)
-
-    exit_code = EXIT_GATE_FAILURE if failed else EXIT_OK
-    return RunResult(exit_code, report, violations_path, verdicts_path)
+    metrics = report["metrics"]
+    bl.write_baseline(
+        cfg.baseline_path,
+        stats=metrics["stats"],
+        histograms=metrics["histograms"],
+        uniqueness=metrics["uniqueness"],
+        accepted_violations=all_keys,
+        created_at=cfg.created_at,
+        schema={"columns": inp.current_schema, "partition_keys": ["part"]},
+        accepted_ref=ref,
+        clones=clones_out,
+    )
 
 
 def _meta(cfg: RunConfig) -> dict[str, Any]:

@@ -218,10 +218,53 @@ def test_zero_row_partition_resumes(spark, tiny_dir, tmp_path_factory, tmp_path)
     out = str(tmp_path_factory.mktemp("zero_row_run"))
     res = run(spark, RunConfig(data_dir=data, out_dir=out))
     assert res.exit_code == EXIT_GATE_FAILURE  # planted violations still fail
-    from codeclone_spark.plans.ledger import Ledger
+    from codeclone_spark.operators.rules import (
+        ALLOWED_SR,
+        DUR_BIN_EDGES,
+        NUMERIC_STATS_COLUMNS,
+    )
+    from codeclone_spark.plans.ledger import (
+        Ledger,
+        accepted_set_sha,
+        partition_data_signature,
+    )
 
     ledger = Ledger(os.path.join(out, "ledger"))
-    assert ledger.partitions["zz-empty"]["rows"] == 0
+    entry = dict(ledger.partitions["zz-empty"])
+    # the wave id and wall time are run-specific; every other field is the
+    # exact zero entry (same shape as a partition with rows)
+    assert entry.pop("wave").startswith("wave-")
+    assert isinstance(entry.pop("elapsed_ms"), int)
+    assert entry == {
+        "status": "done",
+        "data_sig": partition_data_signature(
+            os.path.join(data, "clips"), "zz-empty"
+        ),
+        "baseline_sha": accepted_set_sha([]),
+        "rows": 0,
+        "transcript_null": 0,
+        "undecodable": 0,
+        "approx_ndv": 0,
+        "dur_hist": [0] * (len(DUR_BIN_EDGES) - 1),
+        "colstats": {
+            spec.name: {
+                "null": 0,
+                "min": None,
+                "max": None,
+                "mean": None,
+                "qsk": [0] * spec.nbins,
+            }
+            for spec in NUMERIC_STATS_COLUMNS
+        },
+        "sr_counts": {str(v): 0 for v in ALLOWED_SR},
+        "violations": 0,
+        "suppressed": 0,
+        "rule_counts": {},
+        "digest": "0" * 64,
+    }
+    # same key set as a partition that has rows
+    some = next(p for p in ledger.partitions if p != "zz-empty")
+    assert set(ledger.partitions[some]) == set(ledger.partitions["zz-empty"])
     # resume over the same out_dir converges without touching the empty part
     res2 = run(spark, RunConfig(data_dir=data, out_dir=out))
     assert res2.report["inventory"]["partitions_resumed"] == len(

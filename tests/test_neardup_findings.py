@@ -143,6 +143,18 @@ def test_new_clusters_gate(accepted_baseline):
     assert ("<table>", NEARDUP_RULE_ID) in failed
 
 
+def test_neardup_phase_sits_after_the_waves(accepted_baseline):
+    """The near-dup ladder's phase is marked after the last wave phase and
+    before the uniqueness phase (the benchmark's tracer attributes jobs by
+    this key order; see tests/test_runner_phases.py)."""
+    from perfbench.run import PHASES
+
+    _, r1 = accepted_baseline
+    cut = PHASES.index("uniqueness_and_ndv")
+    expect = [*PHASES[:cut], "neardup_clusters", *PHASES[cut:]]
+    assert list(r1.report["phases"]) == expect
+
+
 def test_accepted_clones_section_shape(accepted_baseline, tiny_manifest):
     base, _ = accepted_baseline
     with open(base) as f:
